@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the declared queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query and total wall seconds.
   *
@@ -147,19 +145,8 @@ object Bench {
     val rec = new BenchRecorder
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val sfDir0 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // codegen-cache sizing and any future engine-level conf come from
-    // the shared SessionDefaults helper (r17 verdict item 2: the conf
-    // must be an engine property consumed by every entry point, not a
-    // bench-only tweak)
-    val spark = graft.core.SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionDefaults.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val cgCounter = installFallbackCounter()
     val cgFallbacks: () => Long = cgCounter.getOrElse(() => 0L)
@@ -174,7 +161,7 @@ object Bench {
     // table once into an N-way-split copy — identical rows, natural
     // layout — OUTSIDE the per-query timers, exactly like the JVM warmup.
     // Correctness runs (Verify) keep the pristine driver layout.
-    val respool = sys.env.getOrElse("SPARK_GRAFT_RESPOOL", cpus).toInt
+    val respool = sys.env.get("SPARK_GRAFT_RESPOOL").map(_.toInt).getOrElse(cpus)
     val respoolT0 = System.nanoTime()
     val sfDir = if (respool <= 1) sfDir0 else {
       val tgt = java.nio.file.Files.createTempDirectory("graft_bench_sf")
@@ -213,16 +200,14 @@ object Bench {
     // ContextCleaner stalls land on unrelated queries. Memoized
     // cross-query frames are consulted at sweep time and never touched —
     // unpersisting a localCheckpoint'd frame would truncate its lineage
-    // for good. Always OUTSIDE timers. SPARK_GRAFT_SWEEP=0 disables it
-    // (the r12→r13 regression-bisect knob).
-    val sweepEnabled = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "1") != "0"
-    def sweep(): Unit = if (sweepEnabled) {
+    // for good. Always OUTSIDE timers.
+    def sweep(): Unit = {
       // drain the tracked-cache registry too (the frames' storage is
       // dropped by clearCache() below either way; this keeps the
       // registry from holding stale Dataset refs across 370 queries)
       graft.core.Caches.release()
       spark.catalog.clearCache()
-      val keep = queries.ExtQueries.memoizedRddIds
+      val keep = graft.core.Caches.memoizedRddIds
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!keep.contains(id)) rdd.unpersist(blocking = false)
       }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes EXPLAINS.md: formatted physical plans of the flagship queries,
@@ -97,13 +96,7 @@ object ExplainDump {
     "sim_ivf2_pq_trained")
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.SessionDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.SessionDefaults.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder

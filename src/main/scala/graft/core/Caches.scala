@@ -1,8 +1,16 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, FutureTask}
 
-import org.apache.spark.sql.Dataset
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped registry for the library's deliberate `cache()` calls.
   *
@@ -35,9 +43,8 @@ import org.apache.spark.sql.Dataset
   * repeated-call case the CacheManager otherwise grows without bound in.
   *
   * The `CacheHygieneSpec` source gate enforces the split: no bare
-  * `.cache()` / `.persist()` anywhere in the library outside this file
-  * (one-shot measurement mains — ScaleSmoke*, RecallGrid* — are exempt:
-  * their process exit reclaims everything).
+  * `.cache()` / `.persist()` anywhere in the library outside this file.
+  * Results shared across queries go through the one [[memo]] below.
   */
 object Caches {
   private val tracked = new ConcurrentLinkedQueue[Dataset[_]]()
@@ -66,4 +73,65 @@ object Caches {
 
   /** Number of currently-tracked (not yet released) cached frames. */
   def trackedCount: Int = tracked.size()
+
+  private val MemoCapacity = 64 // finished entries; least recently used go first
+
+  private final case class MemoKey(session: SparkSession, tag: String,
+      plan: LogicalPlan, files: Seq[(String, Long, Long)])
+
+  // access-ordered; locked only for bookkeeping, never across a build
+  private val entries = new java.util.LinkedHashMap[MemoKey, FutureTask[Any]](16, 0.75f, true)
+  private var hooked: SparkContext = _
+
+  /** The one memo for results shared across queries, keyed on the
+    * session (a fresh session pays its own fills), `tag` (the result and
+    * every build parameter), `source`'s canonicalized analyzed plan as a
+    * plan (its string omits paths and truncates) and each input file's
+    * (path, size, mtime), so a rewritten source rebuilds. A key is built
+    * once: its concurrent callers wait, other keys' callers never do, and
+    * a failed build leaves no entry. Past `MemoCapacity` the least
+    * recently used FINISHED entries are evicted, and closed if
+    * `AutoCloseable`; a context's entries drop, unclosed, when it ends.
+    * A timed run books the fill on whichever consumer runs first. */
+  def memo[V](source: DataFrame, tag: String)(build: => V): V = {
+    val spark = source.sparkSession
+    val files = source.inputFiles.toSeq.sorted.map { f =>
+      val p = new Path(f)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      (f, st.getLen, st.getModificationTime)
+    }
+    val key = MemoKey(spark, tag, source.queryExecution.analyzed.canonicalized, files)
+    val (task, evicted) = entries.synchronized {
+      if (hooked ne spark.sparkContext) {
+        hooked = spark.sparkContext
+        hooked.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            dropContext(spark.sparkContext)
+        })
+      }
+      val task = entries.computeIfAbsent(key, _ => new FutureTask[Any](() => build))
+      val old = entries.values.asScala.filter(_.isDone).take(entries.size - MemoCapacity).toList
+      old.foreach(entries.values.remove)
+      (task, old)
+    }
+    // outside the lock, best effort: a close may run Spark SQL
+    evicted.foreach(t => Try(t.get()).collect { case c: AutoCloseable => c.close() })
+    task.run() // a no-op unless this caller is the first to reach the entry
+    try task.get().asInstanceOf[V]
+    catch { case e: ExecutionException =>
+      entries.synchronized(entries.remove(key, task))
+      throw e.getCause
+    }
+  }
+
+  /** Drops every memo entry built under `sc`; runs when `sc` ends. */
+  private[graft] def dropContext(sc: SparkContext): Unit =
+    entries.synchronized(entries.keySet.removeIf(_.session.sparkContext eq sc)): Unit
+
+  /** Persisted RDD ids owned by memoized frames: a between-query sweep
+    * must keep them, since a localCheckpoint'd frame has no lineage. */
+  def memoizedRddIds: Set[Int] =
+    entries.synchronized(entries.values.asScala.toList).filter(_.isDone)
+      .flatMap(t => Try(t.get()).toOption).collect { case df: Dataset[_] => df }
+      .flatMap(_.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }).toSet
 }

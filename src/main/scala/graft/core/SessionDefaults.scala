@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Engine-level session defaults shared by every entry point (Bench,
-  * Verify, ExplainDump, plan dumps, scale smokes) — the one place a
+  * Verify, ExplainDump, perfbench) — the one place a
   * performance-relevant static conf is decided, so a win measured in the
   * bench is an ENGINE property, not a harness one (r17 verdict item 2:
   * the codegen-cache sizing lived only in Bench.scala, which made the
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
 object SessionDefaults {
 
   /** Apply the engine's session defaults to a builder. Call before
-    * `getOrCreate()`; per-entry-point confs (master, shuffle partitions,
-    * timezone) stay with the caller.
+    * `getOrCreate()`. [[local]] adds the local-mode confs; a caller that
+    * needs its own (master, directories) applies this to its builder.
     *
     *  - `spark.sql.codegen.cache.maxEntries = 4096`: the generated-class
     *    cache is a STATIC conf defaulting to 100 entries. Any long-lived
@@ -29,4 +29,17 @@ object SessionDefaults {
     */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.cache.maxEntries", "4096")
+
+  /** The entry points' local session on `cpus` cores: [[apply]] plus one
+    * shuffle partition per core, UTC session time, and
+    * `spark.sql.legacy.parquet.nanosAsLong` so a TIMESTAMP(NANOS) table
+    * reads as raw nanos (see `Tables.normalizeTs`); UI off. AQE stays at
+    * Spark's default, on. */
+  def local(cpus: Int): SparkSession.Builder =
+    apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false"))
 }

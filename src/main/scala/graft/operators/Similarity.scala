@@ -512,50 +512,17 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
-  /** Session-scoped memo of TRAINED codebooks, keyed on the
-    * canonicalized plan of the UNCHECKPOINTED training source plus the
-    * training parameters. Lloyd training here is a deterministic pure
-    * function of (source rows, params) — the family's exact-BIGINT
-    * oracle contract — and a trained book is a BOUNDED model artifact
-    * (≤ M·K rows of codeword arrays: the NB-model / pqEncodeOnce
-    * collect-the-artifact convention), so within a session every
-    * consumer of the same book shares ONE training run, collected once
-    * and re-issued as a local relation. This mirrors production: an
-    * index build trains its codebooks once and every consumer loads
-    * the artifact; re-deriving the identical book per query re-pays
-    * iters full Lloyd passes for bit-identical rows (r17 verdict item
-    * 6: sim_ivf2_trained and sim_ivf2_pq_trained train byte-identical
-    * coarse books). Disclosed, same discipline as
-    * ExtQueries.jaccardShared: the bench books the training cost on
-    * whichever consumer runs first. The memo holds collected local
-    * rows only — no persisted RDDs, nothing keyed across JVM runs. */
-  private val bookMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  private def memoBook(keySrc: DataFrame, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val key = (keySrc.sparkSession,
-      tag + "|" + keySrc.queryExecution.analyzed.canonicalized.toString)
-    bookMemo.get(key).getOrElse {
-      val b = build
-      val local = keySrc.sparkSession.createDataFrame(
-        java.util.Arrays.asList(b.collect(): _*), b.schema)
-      // putIfAbsent, not getOrElseUpdate: a concurrent race (the bench's
-      // parallel warm pass) trains twice — identical deterministic rows —
-      // rather than ever blocking an unrelated book's fill behind a lock
-      bookMemo.putIfAbsent(key, local).getOrElse(local)
-    }
-  }
-
-  /** [[pqCodebookTrained]] behind the session book memo. `fx0` must be
-    * the UNCHECKPOINTED fixed-point frame (a localCheckpoint wraps the
-    * plan in a per-call LogicalRDD, which would defeat the key); the
-    * training itself re-reads the source — one extra scan the first
-    * time a book is needed, zero scans every time after. */
+  /** [[pqCodebookTrained]] behind [[graft.core.Caches.memo]]: a trained
+    * book (≤ M·K codeword rows) is an index artifact, trained once when a
+    * consumer frame is CONSTRUCTED and re-issued as a local relation.
+    * `fx0` must be the UNCHECKPOINTED fixed-point frame (a per-call
+    * LogicalRDD in the plan would defeat the key). */
   private[graft] def pqCodebookTrainedShared(fx0: DataFrame,
       subspaces: Int, codebookK: Int, sub: Int, iters: Int): DataFrame =
-    memoBook(fx0, s"pqbook:$subspaces:$codebookK:$sub:$iters")(
-      pqCodebookTrained(fx0, subspaces, codebookK, sub, iters))
+    graft.core.Caches.memo(fx0, s"pqbook:$subspaces:$codebookK:$sub:$iters") {
+      val b = pqCodebookTrained(fx0, subspaces, codebookK, sub, iters)
+      fx0.sparkSession.createDataFrame(java.util.Arrays.asList(b.collect(): _*), b.schema)
+    }
 
   /** Full-vector Lloyd-trained centroids in [[rankByCentroids]]' shape:
     * (cid, cfx, cnrm). One subspace = the whole vector. Trains through
@@ -1415,9 +1382,8 @@ object Similarity {
       lit(0L), (acc, v) => acc + v)
 
   /** PQ encoding: every vector's nearest codeword per subspace —
-    * (id, m, cid), ties to the lower cid. private[graft]: ScaleSmokeR15
-    * times the encode pass in isolation. */
-  private[graft] def pqCodes(fx: DataFrame, cb: DataFrame, sub: Int): DataFrame = {
+    * (id, m, cid), ties to the lower cid. */
+  private def pqCodes(fx: DataFrame, cb: DataFrame, sub: Int): DataFrame = {
     val enc0 = fx.crossJoin(broadcast(cb))
       .select(col("id"), col("m"), col("cid"),
         pqSubD2(expr(s"slice(fx, m * $sub + 1, $sub)")).as("d2"))

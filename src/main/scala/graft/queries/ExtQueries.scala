@@ -316,63 +316,37 @@ object ExtQueries {
        |  FROM wh, la)""".stripMargin
 
   /** ONE jaccard candidate pipeline (the inverted-index self-join, ~2.6s
-    * at sf0.1) feeds `dedup_jaccard` AND both cluster finishers. Memoized
-    * per (session, sf dir) with an eager localCheckpoint, mirroring the
-    * production shape — a dedup job computes the pair list once and both
-    * clusters and reports off it. Disclosed: the bench books the pair
-    * computation on whichever of the three queries runs first
-    * (alphabetically `dedup_clusters`). */
-  private val jacPairs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def jaccardShared(s: SparkSession, dir: String): DataFrame =
-    jacPairs.getOrElseUpdate((s, dir),
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", JACCARD_TAU)
-        .localCheckpoint(true))
+    * at sf0.1) feeds `dedup_jaccard` AND both cluster finishers: a dedup
+    * job computes the pair list once, eagerly checkpointed, and every
+    * cluster and report reads it (see [[graft.core.Caches.memo]]). */
+  private def jaccardShared(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    graft.core.Caches.memo(docs, s"jaccardPairs:$JACCARD_TAU")(
+      Dedup.jaccardPairs(docs, "doc_id", "text", JACCARD_TAU).localCheckpoint(true))
+  }
 
   /** ONE NB model fit feeds classify, calibration, and the confidence
-    * gate — same memoization discipline as [[jaccardShared]] (the fit is
-    * a driver-side model artifact, |classes|·B longs); the bench books
-    * it on whichever consumer runs first (alphabetically
-    * `mix_nb_calibration`). */
-  private val nbModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, (Long, Seq[Long]))]]
-
-  private def nbModel(docs: DataFrame): Seq[(String, (Long, Seq[Long]))] = {
-    val key = (docs.sparkSession, docs.inputFiles.headOption.getOrElse(""))
-    nbModels.getOrElseUpdate(key, {
+    * gate; the fit is a driver-side model artifact, |classes|·B longs. */
+  private def nbModel(docs: DataFrame): Seq[(String, (Long, Seq[Long]))] =
+    graft.core.Caches.memo(docs, s"nbModel:$NB_B") {
       val rows = Mixture.nbTable(docs, "text", "source", NB_B).collect()
       val tables = rows.groupBy(_.getString(0)).map { case (c, rs) =>
         c -> rs.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq }
       val priors = Mixture.nbPriors(docs, "source").collect()
         .map(r => r.getString(0) -> r.getLong(2)).toMap
       tables.map { case (c, tb) => c -> (priors(c), tb) }.toSeq
-    })
-  }
+    }
 
   /** ONE embedding-LSH pair pipeline feeds `dedup_embedding` AND the
-    * embedding dedup pipeline — same memoization discipline as
-    * [[jaccardShared]]; the bench books it on whichever runs first
-    * (alphabetically `dedup_embedding`). */
-  private val embPairs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def embeddingShared(s: SparkSession, dir: String): DataFrame =
-    embPairs.getOrElseUpdate((s, dir),
-      Dedup.embeddingPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          COS_TAU, tables = LSH_TABLES)
+    * embedding dedup pipeline, like [[jaccardShared]]. */
+  private def embeddingShared(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    graft.core.Caches.memo(emb, s"embeddingPairs:$COS_TAU:$LSH_TABLES")(
+      Dedup.embeddingPairs(emb, "vec_id", "embedding", COS_TAU, tables = LSH_TABLES)
         .localCheckpoint(true))
+  }
 
-  /** Persisted RDD ids owned by the memoized cross-query frames above.
-    * The bench's between-query orphan sweep (Bench.scala) must never
-    * unpersist these: a localCheckpoint'd frame has its lineage truncated,
-    * so dropping its blocks would break every later query that reuses it. */
-  def memoizedRddIds: Set[Int] =
-    (jacPairs.values ++ embPairs.values).flatMap { df =>
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-    }.toSet
+  def memoizedRddIds: Set[Int] = graft.core.Caches.memoizedRddIds
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- approximate aggregates ----

@@ -1465,7 +1465,7 @@ object RelationalQueries {
     // tables from planning as a broadcast join, which would hide the
     // co-location the query exists to demonstrate.
     "rel_join_bucketed" -> ((s, dir) => {
-      val (ordersTab, lineitemTab) = bucketedTables(s, dir)
+      val BucketedTabs(_, ordersTab, lineitemTab) = bucketedTables(s, dir)
       s.table(lineitemTab).hint("merge")
         .join(s.table(ordersTab), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
@@ -1475,36 +1475,38 @@ object RelationalQueries {
   )
 
   /** One-time bucketed+sorted layout of orders/lineitem on the join key,
-    * memoized per (session, sf dir) — the bench therefore books the
-    * layout cost on the first caller, exactly like a warehouse pays the
-    * bucketing once at ingest. Tables are EXTERNAL (data under
+    * memoized ([[graft.core.Caches.memo]]) exactly like a warehouse pays
+    * the bucketing once at ingest. Tables are EXTERNAL (data under
     * java.io.tmpdir) so nothing lands in the repo; 8 buckets matches the
     * small test tables (production sizing: buckets ∝ data / target file
-    * size). */
-  private val bucketedTabs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    // synchronized: TrieMap.getOrElseUpdate may evaluate the builder
-    // twice under concurrent callers (the bench's parallel warm pass);
-    // a double saveAsTable on the same table name is a hard error
-    bucketedTabs.synchronized { bucketedTabs.getOrElseUpdate((s, dir), {
-      val tag = math.abs(dir.hashCode).toString
+    * size). Table names are unique per build (concurrent sessions never
+    * write one table); an evicted memo entry drops both, bounding the catalog. */
+  private def bucketedTables(s: SparkSession, dir: String): BucketedTabs = {
+    val (orders, lineitem) = (t(s, dir, "orders"), t(s, dir, "lineitem"))
+    // keyed on a never-executed plan over both inputs: either rewritten rebuilds
+    graft.core.Caches.memo(orders.crossJoin(lineitem), "bucketed:8") {
       val basePath = java.nio.file.Files.createTempDirectory("graft_bkt")
       Tables.deleteOnExit(basePath)
       val base = basePath.toString
+      val tag = basePath.getFileName.toString.stripPrefix("graft_bkt")
       val oTab = s"graft_bkt_orders_$tag"
       val lTab = s"graft_bkt_lineitem_$tag"
-      t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
+      orders.select("o_orderkey", "o_orderpriority")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").saveAsTable(oTab)
-      t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
+      lineitem.select("l_orderkey", "l_extendedprice")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$base/lineitem").saveAsTable(lTab)
-      (oTab, lTab)
-    }) }
+      BucketedTabs(s, oTab, lTab)
+    }
+  }
+
+  private final case class BucketedTabs(s: SparkSession, orders: String, lineitem: String)
+      extends AutoCloseable {
+    def close(): Unit = Seq(orders, lineitem).foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
+  }
 
   def oracleSql: Map[String, String] = Map(
     "rel_q1_pricing" ->

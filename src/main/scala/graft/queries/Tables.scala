@@ -214,7 +214,7 @@ object Tables {
   def epochUs(c: Column): Column = unix_micros(c)
 
   private val tmpDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   /** Per-(prefix, input-dir) CACHED temp directory: repeated query
     * invocations (bench loops, repeated correctness runs) reuse one
@@ -222,7 +222,7 @@ object Tables {
     * shutdown hook removes it at JVM exit. Callers write with
     * mode("overwrite"), so reuse is safe. */
   def cachedTempDir(prefix: String, dir: String): String =
-    tmpDirs.getOrElseUpdate((prefix, dir), {
+    tmpDirs.computeIfAbsent((prefix, dir), _ => {
       val p = java.nio.file.Files.createTempDirectory(prefix)
       deleteOnExit(p)
       p.toString

@@ -10,13 +10,11 @@ import scala.jdk.CollectionConverters._
   * `localCheckpoint` (ContextCleaner-reclaimed) and the few
   * stat-load-bearing caches go through `Caches.cached`, which registers
   * them so a long-lived session can reclaim the CacheManager entries
-  * with one `Caches.release()` call. One-shot measurement mains
-  * (ScaleSmoke*, RecallGrid*) are exempt: their process exit reclaims
-  * everything, and their cache-then-count warm-up IS the measurement
-  * protocol. */
+  * with one `Caches.release()` call. Only `Caches.scala` itself is
+  * exempt. */
 class CacheHygieneSpec extends SparkSpec {
 
-  private val exemptFile = "^(ScaleSmoke.*|RecallGrid.*|Caches)\\.scala$".r
+  private val exemptFile = "^Caches\\.scala$".r
 
   private def mainSources: Seq[Path] =
     Files.walk(Paths.get("src/main/scala/graft")).iterator().asScala
