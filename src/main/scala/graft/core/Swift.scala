@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -94,33 +96,40 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
   def failOnGlobalWindow(b: Boolean = true): Swift =
     withCfg(cfg.copy(failOnGlobalWindow = b))
 
-  /** Row count, needed by the K3 cost model. For file sources Spark
-    * answers count() from footer metadata + columnar batch counts — no
-    * full materialization — so this stays cheap at scale. */
-  lazy val nrows: Long = df.count()
+  @volatile private var previewRan = false
 
-  // ---- K1 sample extraction (base.py:21,46-47) ----
-  /** min(sampleSize, ceil(n/25)) rows — the reference's shrink rule for
-    * small inputs. The draw is a seeded RANDOM Bernoulli sample at
-    * fraction k/n (the reference draws random sorted positions,
-    * base.py:46-47): a prefix `limit(k)` only sees leading-partition rows,
-    * so a vectorized candidate that is wrong only on data appearing later
-    * (a null pattern, a dtype quirk in a later file) would be accepted —
-    * exactly what the probe must prevent. No `limit` on the sampled plan
-    * either: limit-after-sample would again prefer leading partitions.
-    * The drawn size concentrates at k (±O(√k)); the prefix path remains
-    * only as a fallback for degenerate (empty) draws and tiny inputs. */
-  private[core] def sampleRows(): Array[Row] = {
-    val k =
-      if (nrows == 0) 0
-      else if (nrows <= 25000) math.max(1, math.ceil(nrows / 25.0).toInt)
-      else cfg.sampleSize
-    if (k == 0) return Array.empty
-    if (k >= nrows) return df.limit(k).collect()
-    val frac = math.min(1.0, k.toDouble / nrows)
-    val drawn = df.sample(withReplacement = false, frac, cfg.sampleSeed).collect()
-    if (drawn.nonEmpty) drawn else df.limit(k).collect()
+  /** The selector's one look at the input: row count and K1 sample from a
+    * single Spark job ([[SwiftPreview]]). Lazy, so forced and count-only
+    * calls never run it. */
+  private lazy val preview: SwiftPreview = {
+    val p = SwiftPreview(df.queryExecution, cfg.sampleSize, cfg.sampleSeed)
+    previewRan = true
+    p
   }
+
+  /** Row count. Free once the selector's preview has run; otherwise one
+    * counting job over the column-pruned input, with no exchange. */
+  lazy val nrows: Long = if (previewRan) preview.n else SwiftPreview.count(df)
+
+  private def toRows(rows: Array[InternalRow]): Array[Row] = {
+    val fromInternal = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    rows.map(fromInternal)
+  }
+
+  /** K1 — min(sampleSize, ceil(n/25)) rows drawn uniformly at random
+    * without replacement (base.py:21,46-47); see [[SwiftPreview]]. */
+  private[graft] def sampleRows(): Array[Row] = toRows(preview.sample)
+
+  /** The K3 driver-local route's input, when the cost model picks it
+    * (`estSec` within the threshold) AND the preview already holds every
+    * row (n <= sampleSize, and n <= localMaxRows). The local plan then
+    * runs on rows already on the driver. A larger input goes Parallel:
+    * collecting it again and re-planning it as a LocalRelation costs more
+    * than the distributed job saves (SCALING.md, "Selector route regret"). */
+  private def localInput(estSec: Double): Option[DataFrame] =
+    if (estSec <= cfg.thresholdSec && preview.complete && preview.n <= cfg.localMaxRows)
+      Some(localDf(toRows(preview.rows).toSeq, df.schema))
+    else None
 
   private def localDf(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
@@ -149,9 +158,9 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val theUdf = udf(rowFn)
     def parallelPlan: DataFrame = df.withColumn(out, theUdf(col(colName)))
 
-    // empty input short-circuits to the naive path (swifter/swifter.py:292-294)
-    if (nrows == 0) return finish(parallelPlan, SwiftStrategy.Parallel)
     if (cfg.forceParallel) return finish(parallelPlan, SwiftStrategy.Parallel)
+    // empty input short-circuits to the naive path (swifter/swifter.py:292-294)
+    if (preview.n == 0) return finish(parallelPlan, SwiftStrategy.Parallel)
 
     val sample = sampleRows()
     val idx = df.schema.fieldIndex(colName)
@@ -174,12 +183,10 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val estSec = estimateFullRunSec(sampleIn.size) {
       Progress.suppressed { var i = 0; while (i < sampleIn.size) { rowFn(sampleIn(i)); i += 1 } }
     }
-    if (estSec <= cfg.thresholdSec && nrows <= cfg.localMaxRows) {
-      // driver-local route: run the same plan over a LocalRelation —
-      // single in-memory partition, no scan/shuffle/job-per-stage overhead.
-      val all = df.collect()
-      val res = localDf(all.toSeq, df.schema).withColumn(out, theUdf(col(colName)))
-      return finish(res, SwiftStrategy.Local)
+    // driver-local route: run the same plan over a LocalRelation —
+    // single in-memory partition, no scan/shuffle/job-per-stage overhead.
+    localInput(estSec).foreach { in =>
+      return finish(in.withColumn(out, theUdf(col(colName))), SwiftStrategy.Local)
     }
 
     // ---- K5 parallel-correctness validation (swifter/swifter.py:262-268) ----
@@ -208,7 +215,7 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     while (i < cfg.nRepeats) {
       val t0 = System.nanoTime(); body; total += System.nanoTime() - t0; i += 1
     }
-    (total.toDouble / cfg.nRepeats / 1e9) / sampleN * nrows
+    (total.toDouble / cfg.nRepeats / 1e9) / sampleN * preview.n
   }
 
   // =====================================================================
@@ -240,7 +247,12 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val rowFn: Row => Any =
       if (!opaque) rawRowFn
       else r => { val v = rawRowFn(r); if (v == null) null else v.toString }
-    if (nrows == 0) {
+    // forced, and the result type needs no sample: no preview
+    if (cfg.forceParallel && (outType.isDefined || opaque)) {
+      val dt = outType.getOrElse(StringType)
+      return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
+    }
+    if (preview.n == 0) {
       val dt = outType.getOrElse(if (opaque) StringType else NullType)
       return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
     }
@@ -264,11 +276,10 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val estSec = estimateFullRunSec(sample.length) {
       Progress.suppressed { var i = 0; while (i < sample.length) { rowFn(sample(i)); i += 1 } }
     }
-    if (estSec <= cfg.thresholdSec && nrows <= cfg.localMaxRows) {
-      val all = df.collect()
-      val res = mapRowsDistributed(localDf(all.toSeq, df.schema), out, rowFn, dt)
-      finish(res, SwiftStrategy.Local)
-    } else finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
+    localInput(estSec) match {
+      case Some(in) => finish(mapRowsDistributed(in, out, rowFn, dt), SwiftStrategy.Local)
+      case None => finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
+    }
   }
 
   /** Distributed row map with a dynamic output schema: typed Dataset map
@@ -400,7 +411,9 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
         if (cols.contains(c)) mk(col(c)).as(c) else col(c)
       }: _*)
 
-    if (nrows == 0 || cfg.forceParallel) return finish(project(theUdf(_)), SwiftStrategy.Parallel)
+    // without a candidate there is nothing to probe: Parallel, no preview
+    if (cfg.forceParallel || vectorized.isEmpty || preview.n == 0)
+      return finish(project(theUdf(_)), SwiftStrategy.Parallel)
 
     vectorized.foreach { vec =>
       val sample = sampleRows()

@@ -9,9 +9,11 @@ package graft.core
   *    (swifter/swifter.py:303) exists because Dask's process scheduler
   *    pickles Python string objects; Spark's Tungsten UTF8String has no
   *    such cliff (SURVEY.md §4.2).
-  *  - `localMaxRows` bounds the driver-local route: in the reference all
-  *    data is already in driver memory, so "local" is free; on a cluster
-  *    we only collect when the input is provably small.
+  *  - the driver-local route runs only on rows already on the driver: in
+  *    the reference all data is in driver memory, so "local" is free; here
+  *    it is taken only when the selector's one-job preview holds every row
+  *    (n <= `sampleSize`) and n <= `localMaxRows`. A larger input is never
+  *    collected for it.
   */
 final case class SwiftConfig(
     /** Target partition count for the parallel path. None = leave the
@@ -22,7 +24,9 @@ final case class SwiftConfig(
       * (cluster) path is chosen (reference dask_threshold=1s,
       * swifter/swifter.py:23). */
     thresholdSec: Double = 1.0,
-    /** K1 — probe sample size (reference SAMPLE_SIZE=1000, base.py:21). */
+    /** K1 — probe sample size (reference SAMPLE_SIZE=1000, base.py:21),
+      * and the most rows the preview holds, so also the largest input the
+      * driver-local route takes. */
     sampleSize: Int = 1000,
     /** K1 — seed for the random probe draw (reference draws random sorted
       * positions, base.py:46-47); fixed so selector decisions reproduce. */
@@ -36,7 +40,8 @@ final case class SwiftConfig(
     allowParallelOnStrings: Boolean = true,
     /** K9 — bypass the selector entirely (swifter/swifter.py:131-138). */
     forceParallel: Boolean = false,
-    /** Upper bound on rows for the driver-local route (see note above). */
+    /** Upper bound on rows for the driver-local route (see note above);
+      * 0 turns the route off ([[SwiftParallel]]). */
     localMaxRows: Long = 100000L,
     /** O4 — groupBy stays local at or below this many rows (reference
       * GROUPBY_MAX_ROWS_PANDAS_DEFAULT=5000, swifter/swifter.py:31). */

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 
 /** Typed facade of the selector for `Dataset[T]` users (SURVEY.md §1.1:
   * `Dataset[T]` where compile-time field checks help). The vectorized
@@ -18,10 +19,12 @@ final class SwiftTyped[T](ds: Dataset[T], cfg: SwiftConfig) {
   @volatile var lastStrategy: SwiftStrategy = SwiftStrategy.Parallel
 
   def apply[U: Encoder](f: T => U): Dataset[U] = {
-    val n = ds.count()
-    if (n == 0 || cfg.forceParallel) { lastStrategy = SwiftStrategy.Parallel; return ds.map(f) }
-    val k = if (n <= 25000) math.max(1, math.ceil(n / 25.0).toInt) else cfg.sampleSize
-    val sample = ds.limit(k).collect()
+    if (cfg.forceParallel) { lastStrategy = SwiftStrategy.Parallel; return ds.map(f) }
+    val p = SwiftPreview(ds.queryExecution, cfg.sampleSize, cfg.sampleSeed)
+    if (p.n == 0) { lastStrategy = SwiftStrategy.Parallel; return ds.map(f) }
+    val fromInternal = encoderFor(ds.encoder)
+      .resolveAndBind(ds.queryExecution.analyzed.output).createDeserializer()
+    val sample = p.sample.toIndexedSeq.map(fromInternal)
     val estSec = {
       var total = 0L
       var i = 0
@@ -30,11 +33,12 @@ final class SwiftTyped[T](ds: Dataset[T], cfg: SwiftConfig) {
         Progress.suppressed { sample.foreach(f) }
         total += System.nanoTime() - t0; i += 1
       }
-      (total.toDouble / cfg.nRepeats / 1e9) / math.max(1, sample.length) * n
+      (total.toDouble / cfg.nRepeats / 1e9) / math.max(1, sample.length) * p.n
     }
-    if (estSec <= cfg.thresholdSec && n <= cfg.localMaxRows) {
+    // local only when the preview already holds every row (see Swift.localInput)
+    if (estSec <= cfg.thresholdSec && p.complete && p.n <= cfg.localMaxRows) {
       lastStrategy = SwiftStrategy.Local
-      val all: Seq[U] = ds.collect().toIndexedSeq.map(f)
+      val all: Seq[U] = p.rows.toIndexedSeq.map(r => f(fromInternal(r)))
       ds.sparkSession.createDataset(all)
     } else { lastStrategy = SwiftStrategy.Parallel; ds.map(f) }
   }

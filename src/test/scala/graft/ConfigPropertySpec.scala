@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.core.{Swift, SwiftConfig, SwiftDefaults, SwiftParallel, SwiftStrategy}
+import graft.core.{Swift, SwiftConfig, SwiftDefaults, SwiftParallel, SwiftStrategy, SwiftTyped}
 import graft.functions.GraftFunctions
 
 /** K7/K9/O7 parity + the SURVEY §5 ScalaCheck property: every selector
@@ -150,32 +152,23 @@ class ConfigPropertySpec extends SparkSpec {
 
   test("K6: applyAuto schema probe draws from the K1 sample, not a per-key re-scan") {
     val li = queries.Tables.t(spark, sf001, "lineitem")
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    val planned = try {
-      // the fn indexes rows and the key BY NAME: the driver-side probe
-      // rows must carry a schema exactly like the encoder-decoded rows
-      // the distributed flatMapGroups sees (r8 shipped schema-less
-      // GenericRow probe rows because this test only indexed positionally)
-      val out = Swift(li).groupBy("l_returnflag").select("l_quantity")
+    // the fn indexes rows and the key BY NAME: the driver-side probe
+    // rows must carry a schema exactly like the encoder-decoded rows
+    // the distributed flatMapGroups sees (r8 shipped schema-less
+    // GenericRow probe rows because this test only indexed positionally)
+    val (planned, jobs) = jobsDuring {
+      Swift(li).groupBy("l_returnflag").select("l_quantity")
         .applyAuto(names = Seq("rf", "sq")) { (k, rows) =>
           var sq = 0.0
           rows.foreach(r => sq += r.getAs[Double]("l_quantity"))
           Iterator.single(org.apache.spark.sql.Row(
             k.getAs[String]("l_returnflag"), sq))
         }
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext) // deterministic bus drain
-      out
-    } finally spark.sparkContext.removeSparkListener(l)
-    // probe cost: one count (nrows) + one bounded sample collect (+ the
-    // local-route collect for this small input) — NOT a limit-probe plus
-    // a full filter(key) scan of the input per inferred schema
-    assert(jobs <= 3, s"applyAuto probe launched $jobs jobs")
+    }
+    // probe cost: the one preview job, which also gives the row count
+    // the groupBy routing reads — NOT a limit-probe plus a full
+    // filter(key) scan of the input per inferred schema
+    assert(jobs == 1, s"applyAuto probe launched $jobs jobs")
     assert(planned.schema.fieldNames.toSeq == Seq("rf", "sq"))
     assert(planned.count() == 3) // three return flags
   }
@@ -206,19 +199,54 @@ class ConfigPropertySpec extends SparkSpec {
   }
 
   test("property: selector strategies agree on arbitrary inputs (ScalaCheck gens, seeded)") {
-    val genXs = Gen.listOfN(200, Gen.chooseNum(-1e6, 1e6))
-    (0 until 5).foreach { trial =>
-      val xs = genXs(Gen.Parameters.default, Seed(42L + trial)).get
+    // every apply surface, at sizes on both sides of the preview's capacity
+    // (sampleSize), under every forced route, with and without a candidate:
+    // the same sorted rows, and all three routes taken somewhere
+    val sampleSize = SwiftConfig().sampleSize
+    val fn: Double => Double = v => if (v < 0) -v else v * 2
+    val vecOf: Column => Column = c => when(c < 0, -c).otherwise(c * 2)
+    val handles: Seq[(String, Swift => Swift)] = Seq(
+      "default" -> identity, "forceParallel" -> (_.forceParallel()),
+      "threshold(0)" -> (_.threshold(0)), "threshold(1e9)" -> (_.threshold(1e9)))
+    val typedHandles: Seq[SwiftTyped[P] => SwiftTyped[P]] = Seq(
+      identity, _.forceParallel(), _.threshold(0), _.threshold(1e9))
+    val routes = scala.collection.mutable.Set.empty[SwiftStrategy]
+    def sorted(out: DataFrame): Seq[(Long, Double)] =
+      out.select("id", "y").as[(Long, Double)].collect().toSeq.sorted
+
+    Seq(5, sampleSize, sampleSize + 1, 5000).zipWithIndex.foreach { case (n, trial) =>
+      val xs = Gen.listOfN(n, Gen.chooseNum(-1e6, 1e6))(Gen.Parameters.default, Seed(42L + trial)).get
+      val expect = xs.zipWithIndex.map { case (x, i) => (i.toLong, fn(x)) }.sorted
       val d = xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("id", "x")
-      val fn: Double => Double = v => if (v < 0) -v else v * 2
-      val vec = when(col("x") < 0, -col("x")).otherwise(col("x") * 2)
-      val a = Swift(d).applyScalar[Double, Double]("x", "y")(fn, Some(vec))
-        .orderBy("id").select("y").collect().map(_.getDouble(0)).toSeq
-      val b = Swift(d).forceParallel().applyScalar[Double, Double]("x", "y")(fn)
-        .orderBy("id").select("y").collect().map(_.getDouble(0)).toSeq
-      val c = Swift(d).threshold(1e9).applyScalar[Double, Double]("x", "y")(fn)
-        .orderBy("id").select("y").collect().map(_.getDouble(0)).toSeq
-      assert(a == b && b == c, s"strategy divergence on trial $trial")
+      for ((hn, h) <- handles; vec <- Seq(false, true)) {
+        val calls: Seq[(String, Swift => DataFrame)] = Seq(
+          "applyScalar" -> (_.applyScalar[Double, Double]("x", "y")(fn,
+            if (vec) Some(vecOf(col("x"))) else None)),
+          "applyRows" -> (_.applyRows("y")(r => fn(r.getDouble(1)),
+            vectorized = if (vec) Some(vecOf(col("x"))) else None)),
+          "applyRows(outType)" -> (_.applyRows("y")(r => fn(r.getDouble(1)),
+            vectorized = if (vec) Some(vecOf(col("x"))) else None, outType = Some(DoubleType))),
+          "applymap" -> (_.applymap[Double, Double](fn,
+            vectorized = if (vec) Some(vecOf) else None, columns = Seq("x"))
+            .withColumnRenamed("x", "y")))
+        for ((cn, call) <- calls) {
+          val sw = h(Swift(d))
+          assert(sorted(call(sw)) == expect, s"$cn diverges: n=$n $hn vec=$vec (${sw.lastStrategy})")
+          routes += sw.lastStrategy
+          if (cn == "applyScalar" && hn == "threshold(1e9)" && !vec)
+            assert(sw.lastStrategy ==
+              (if (n <= sampleSize) SwiftStrategy.Local else SwiftStrategy.Parallel),
+              s"n=$n: the local route needs every row in the preview")
+        }
+      }
+      val ds = xs.zipWithIndex.map { case (x, i) => P(i.toLong, x) }.toDS()
+      typedHandles.foreach { h =>
+        val sw = h(SwiftTyped(ds))
+        val got = sw.apply((p: P) => (p.id, fn(p.x))).collect().toSeq.sorted
+        assert(got == expect, s"SwiftTyped diverges: n=$n (${sw.lastStrategy})")
+        routes += sw.lastStrategy
+      }
     }
+    assert(routes == Set(SwiftStrategy.Vectorized, SwiftStrategy.Parallel, SwiftStrategy.Local))
   }
 }

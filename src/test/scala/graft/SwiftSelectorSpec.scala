@@ -120,6 +120,66 @@ class SwiftSelectorSpec extends SparkSpec {
     assert(out.columns.contains("y"))
   }
 
+  test("job budget: one preview job per selector call on a parquet read, none when forced") {
+    // lineitem respooled into 4 part files, so the preview reads 4 partitions
+    val dir = java.nio.file.Files.createTempDirectory("swift-jobs").resolve("lineitem").toString
+    spark.read.parquet(s"$sf001/lineitem.parquet").repartition(4).write.parquet(dir)
+    val li = spark.read.parquet(dir)
+    assert(li.queryExecution.toRdd.getNumPartitions == 4)
+    val sampleSize = SwiftConfig().sampleSize
+    val branchy: Double => Double = x => if (x < 12) x * x else math.sqrt(x)
+    def branchyAt(sw: Swift) = {
+      sw.applyScalar[Double, Double]("l_quantity", "y")(branchy)
+      sw.lastStrategy
+    }
+
+    val (vecRoute, vecJobs) = jobsDuring {
+      val sw = Swift(li)
+      sw.applyScalar[Double, Double]("l_quantity", "y")(
+        x => x * x, vectorized = Some(col("l_quantity") * col("l_quantity")))
+      sw.lastStrategy
+    }
+    assert(vecRoute == SwiftStrategy.Vectorized && vecJobs == 1, s"vectorized: $vecJobs jobs")
+    // n > sampleSize: Parallel even where K3 would run locally
+    val (parRoute, parJobs) = jobsDuring(branchyAt(Swift(li).threshold(1e9)))
+    assert(parRoute == SwiftStrategy.Parallel && parJobs == 1, s"parallel: $parJobs jobs")
+
+    val small = li.filter(col("l_orderkey") <= 100)
+    val nSmall = small.count()
+    assert(nSmall > 0 && nSmall <= sampleSize)
+    val local = Swift(small)
+    val (localRoute, localJobs) = jobsDuring(branchyAt(local))
+    assert(localRoute == SwiftStrategy.Local && localJobs == 1, s"local: $localJobs jobs")
+    // the local plan runs on the preview's rows: materializing it starts no job
+    val (localOut, outJobs) = jobsDuring(
+      local.applyScalar[Double, Double]("l_quantity", "y")(branchy).collect())
+    assert(outJobs == 0)
+    val parallelOut = Swift(small).forceParallel()
+      .applyScalar[Double, Double]("l_quantity", "y")(branchy).collect()
+    assert(localOut.map(_.toString).sorted.sameElements(parallelOut.map(_.toString).sorted))
+
+    val (forcedRoute, forcedJobs) = jobsDuring(branchyAt(Swift(li).forceParallel()))
+    assert(forcedRoute == SwiftStrategy.Parallel && forcedJobs == 0)
+
+    // the sample: exactly k rows, the same draw for the same seed, drawn
+    // from more than one partition
+    val tagged = li.withColumn("pid", spark_partition_id())
+    val n = li.count()
+    val k = math.min(sampleSize.toLong, (n + 24) / 25).toInt
+    val (s1, sampleJobs) = jobsDuring(Swift(tagged).sampleRows())
+    assert(sampleJobs == 1)
+    assert(s1.length == k, s"sample of ${s1.length} rows, expected $k")
+    assert(Swift(tagged).sampleRows().toSeq == s1.toSeq)
+    assert(s1.map(_.getAs[Int]("pid")).distinct.length > 1)
+    assert(Swift(tagged).sampleSeed(7L).sampleRows().toSeq != s1.toSeq)
+
+    // 16 partitions: treeReduce merges partial previews on executors first
+    val wide = Swift(spark.range(0, 5000, 1, 16).withColumn("x", col("id") * 0.5))
+    val (w, wideJobs) = jobsDuring(wide.sampleRows())
+    assert(wideJobs == 1 && wide.nrows == 5000)
+    assert(w.length == 200 && w.map(_.getLong(0)).distinct.length == 200)
+  }
+
   test("O2: row apply with expand/reduce/broadcast shaping") {
     val d = (1 to 100).map(i => (i.toDouble, i * 2.0)).toDF("a", "b")
     val expand = Swift(d).applyRows("r")(
