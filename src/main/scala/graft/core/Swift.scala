@@ -1,11 +1,12 @@
 package graft.core
 
 import scala.jdk.CollectionConverters._
-import scala.reflect.runtime.universe.TypeTag
+import scala.reflect.runtime.universe.{TypeTag, typeOf}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +22,11 @@ import org.apache.spark.sql.types._
   *   3. Local — driver-local execution over a LocalRelation for inputs
   *      too small to be worth a cluster job (K3 cost model).
   *
+  * A choosing call runs one K2 probe, then the K3 estimate and the Local
+  * rule ([[SwiftPreview]]), and puts the resulting [[SwiftDecision]] on
+  * the returned Dataset's plan ([[Swift.decisions]]). Methods with a
+  * fixed route (windows, aggregates, projections) record nothing.
+  *
   * The selection must be observationally invisible (SURVEY.md §1.4): every
   * strategy returns the same rows. Row order is NOT part of the contract —
   * Spark DataFrames are unordered; callers that need the pandas index
@@ -32,11 +38,26 @@ object Swift {
   def apply(df: DataFrame): Swift = new Swift(df, SwiftDefaults.get)
   def apply(df: DataFrame, cfg: SwiftConfig): Swift = new Swift(df, cfg)
 
+  private val DecisionTag = TreeNodeTag[SwiftDecision]("swift.decision")
+
+  /** Puts `d` on `ds`'s analyzed plan. Datasets built on top of `ds`
+    * (select, filter, repartition) keep that node, and the tag. */
+  private[core] def record[D <: Dataset[_]](ds: D, d: SwiftDecision): D = {
+    ds.queryExecution.analyzed.setTagValue(DecisionTag, d)
+    ds
+  }
+
+  /** The selector decisions `ds` was built from, inputs before outputs:
+    * one per choosing call (`applyScalar`, `applyRows`, `applymap`,
+    * `SwiftTyped.apply`, `SwiftGroupBy.apply`) in its plan. */
+  def decisions(ds: Dataset[_]): Seq[SwiftDecision] =
+    ds.queryExecution.analyzed.flatMap(_.getTagValue(DecisionTag)).reverse
+
   /** Exact probe-equality: reference uses np.array_equal
     * (swifter/swifter.py:313-316). Integral values compare by exact long
     * equality and decimals by compareTo — widening everything to double
     * would make distinct Long/Decimal values beyond 2^53 compare equal,
-    * letting the K2/K5 probes certify a candidate that differs from the
+    * letting the K2 probe certify a candidate that differs from the
     * row function. Only true floating types compare by double bits. */
   private[core] def sameValue(a: Any, b: Any): Boolean = (a, b) match {
     case (null, null) => true
@@ -82,10 +103,6 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
   // ---- K9 fluent configuration (swifter/swifter.py:99-138) ----
   def npartitions(n: Int): Swift = withCfg(cfg.copy(npartitions = Some(n)))
   def threshold(sec: Double): Swift = withCfg(cfg.copy(thresholdSec = sec))
-  def progressBar(enable: Boolean, desc: String = "swift"): Swift =
-    withCfg(cfg.copy(progressBar = enable, progressDesc = desc))
-  def allowParallelOnStrings(b: Boolean): Swift =
-    withCfg(cfg.copy(allowParallelOnStrings = b))
   def forceParallel(b: Boolean = true): Swift = withCfg(cfg.copy(forceParallel = b))
   def sampleSize(n: Int): Swift = withCfg(cfg.copy(sampleSize = n))
   def sampleSeed(n: Long): Swift = withCfg(cfg.copy(sampleSeed = n))
@@ -120,26 +137,51 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     * without replacement (base.py:21,46-47); see [[SwiftPreview]]. */
   private[graft] def sampleRows(): Array[Row] = toRows(preview.sample)
 
-  /** The K3 driver-local route's input, when the cost model picks it
-    * (`estSec` within the threshold) AND the preview already holds every
-    * row (n <= sampleSize, and n <= localMaxRows). The local plan then
-    * runs on rows already on the driver. A larger input goes Parallel:
-    * collecting it again and re-planning it as a LocalRelation costs more
-    * than the distributed job saves (SCALING.md, "Selector route regret"). */
-  private def localInput(estSec: Double): Option[DataFrame] =
-    if (estSec <= cfg.thresholdSec && preview.complete && preview.n <= cfg.localMaxRows)
-      Some(localDf(toRows(preview.rows).toSeq, df.schema))
-    else None
+  /** The Local route's input: every row, already held by the preview
+    * (taken only under [[SwiftPreview.runsLocal]]). */
+  private def localInput: DataFrame = localDf(toRows(preview.rows).toSeq, df.schema)
 
   private def localDf(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** Strategy of the last apply-family call, for tests/introspection. */
-  @volatile var lastStrategy: SwiftStrategy = SwiftStrategy.Parallel
+  private def finish(out: DataFrame, d: SwiftDecision): DataFrame =
+    Swift.record(cfg.npartitions.fold(out)(out.repartition), d)
 
-  private def finish(out: DataFrame, s: SwiftStrategy): DataFrame = {
-    lastStrategy = s
-    cfg.npartitions.fold(out)(out.repartition)
+  /** A decision with the preview's row count. */
+  private def decided(route: SwiftStrategy, probe: SwiftProbe,
+      estSec: Option[Double] = None): SwiftDecision =
+    SwiftDecision(route, probe, Some(preview.n), estSec)
+
+  /** K2 — the candidate `vec` over the sample (as a LocalRelation) against
+    * `oracle`, the row function's results on the same rows
+    * (swifter/swifter.py:309-317). */
+  private def probe(sample: Array[Row], vec: Column, oracle: Seq[Any]): SwiftProbe =
+    try {
+      val got = Progress.suppressed {
+        localDf(sample.toSeq, df.schema).select(vec).collect().toSeq.map(_.get(0))
+      }
+      if (Swift.sameValues(got, oracle)) SwiftProbe.Accepted else SwiftProbe.Mismatch
+    } catch { case e: Exception => SwiftProbe.Threw(e.getClass.getName) }
+
+  /** The route for a row function `rowFn` with an optional candidate: K2
+    * probes the candidate; failing that, K3 times `rowFn` over the sample
+    * and the Local rule picks Local or Parallel. `oracle` is `rowFn` over
+    * `sample` (K7: computed with output suppressed). */
+  private def choose(sample: Array[Row], rowFn: Row => Any, oracle: Seq[Any],
+      vectorized: Option[Column]): SwiftDecision = {
+    val k2 = vectorized.fold[SwiftProbe](SwiftProbe.NoCandidate)(probe(sample, _, oracle))
+    if (k2 == SwiftProbe.Accepted) return decided(SwiftStrategy.Vectorized, k2)
+    val estSec = preview.estimateSec(cfg.nRepeats)(Progress.suppressed { sample.foreach(rowFn) })
+    val route = if (preview.runsLocal(estSec, cfg)) SwiftStrategy.Local else SwiftStrategy.Parallel
+    decided(route, k2, Some(estSec))
+  }
+
+  /** `rowFn` on column `idx` of a row, as `functions.udf(rowFn)` applies
+    * it: a null input of a primitive type gives null without calling
+    * `rowFn` (an unboxed null would reach it as 0). */
+  private def scalarOn[T: TypeTag](idx: Int, rowFn: T => Any): Row => Any = {
+    val nullGivesNull = typeOf[T] <:< typeOf[AnyVal]
+    r => if (nullGivesNull && r.isNullAt(idx)) null else rowFn(r.getAs[T](idx))
   }
 
   // =====================================================================
@@ -156,66 +198,23 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
       rowFn: T => U,
       vectorized: Option[Column] = None): DataFrame = {
     val theUdf = udf(rowFn)
-    def parallelPlan: DataFrame = df.withColumn(out, theUdf(col(colName)))
-
-    if (cfg.forceParallel) return finish(parallelPlan, SwiftStrategy.Parallel)
+    def udfOver(in: DataFrame): DataFrame = in.withColumn(out, theUdf(col(colName)))
+    if (cfg.forceParallel) return finish(udfOver(df), SwiftDecision.fixedParallel)
     // empty input short-circuits to the naive path (swifter/swifter.py:292-294)
-    if (preview.n == 0) return finish(parallelPlan, SwiftStrategy.Parallel)
+    if (preview.n == 0)
+      return finish(udfOver(df), decided(SwiftStrategy.Parallel, SwiftProbe.NoCandidate))
 
     val sample = sampleRows()
-    val idx = df.schema.fieldIndex(colName)
-    val sampleIn: Seq[T] = sample.toSeq.map(r => r.getAs[T](idx))
+    val onRow = scalarOn(df.schema.fieldIndex(colName), rowFn)
     // driver oracle = row-at-a-time result on the sample (K7: suppressed)
-    val oracle: Seq[Any] = Progress.suppressed { sampleIn.map(v => rowFn(v)) }
-
-    // ---- K2 vectorization probe (swifter/swifter.py:309-317) ----
-    vectorized.foreach { vec =>
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () } // K5 fallback chain: expression -> UDF
-    }
-
-    // ---- K3 cost model (swifter/swifter.py:319-326) ----
-    val estSec = estimateFullRunSec(sampleIn.size) {
-      Progress.suppressed { var i = 0; while (i < sampleIn.size) { rowFn(sampleIn(i)); i += 1 } }
-    }
-    // driver-local route: run the same plan over a LocalRelation —
-    // single in-memory partition, no scan/shuffle/job-per-stage overhead.
-    localInput(estSec).foreach { in =>
-      return finish(in.withColumn(out, theUdf(col(colName))), SwiftStrategy.Local)
-    }
-
-    // ---- K5 parallel-correctness validation (swifter/swifter.py:262-268) ----
-    val validated =
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema)
-            .withColumn(out, theUdf(col(colName))).collect().toSeq.map(_.getAs[Any](out))
-        }
-        Swift.sameValues(got, oracle)
-      } catch { case _: Exception => false }
-    if (validated) finish(parallelPlan, SwiftStrategy.Parallel)
-    else { // final fallback: local naive loop (reference :283-285)
-      val all = df.collect()
-      finish(localDf(all.toSeq, df.schema).withColumn(out, theUdf(col(colName))),
-        SwiftStrategy.Local)
-    }
-  }
-
-  /** K3 — time `body` nRepeats times, extrapolate sample→full duration:
-    * est = mean_sample_time / sample_n * nrows (swifter/swifter.py:319-322). */
-  private def estimateFullRunSec(sampleN: Int)(body: => Unit): Double = {
-    if (sampleN == 0) return 0.0
-    var total = 0L
-    var i = 0
-    while (i < cfg.nRepeats) {
-      val t0 = System.nanoTime(); body; total += System.nanoTime() - t0; i += 1
-    }
-    (total.toDouble / cfg.nRepeats / 1e9) / sampleN * preview.n
+    val oracle: Seq[Any] = Progress.suppressed { sample.toSeq.map(onRow) }
+    val d = choose(sample, onRow, oracle, vectorized)
+    finish(d.route match {
+      case SwiftStrategy.Vectorized => df.withColumn(out, vectorized.get)
+      // the same plan over a LocalRelation: one in-memory partition, no scan
+      case SwiftStrategy.Local => udfOver(localInput)
+      case SwiftStrategy.Parallel => udfOver(df)
+    }, d)
   }
 
   // =====================================================================
@@ -250,36 +249,25 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     // forced, and the result type needs no sample: no preview
     if (cfg.forceParallel && (outType.isDefined || opaque)) {
       val dt = outType.getOrElse(StringType)
-      return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
+      return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftDecision.fixedParallel)
     }
     if (preview.n == 0) {
       val dt = outType.getOrElse(if (opaque) StringType else NullType)
-      return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
+      return finish(mapRowsDistributed(df, out, rowFn, dt),
+        decided(SwiftStrategy.Parallel, SwiftProbe.NoCandidate))
     }
     val sample = sampleRows()
     val oracle: Seq[Any] = Progress.suppressed { sample.toSeq.map(rowFn) }
     val dt = outType.getOrElse(if (opaque) StringType else TypeInfer.of(oracle))
 
-    if (cfg.forceParallel)
-      return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
-
-    vectorized.foreach { vec =>
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () }
-    }
-
-    val estSec = estimateFullRunSec(sample.length) {
-      Progress.suppressed { var i = 0; while (i < sample.length) { rowFn(sample(i)); i += 1 } }
-    }
-    localInput(estSec) match {
-      case Some(in) => finish(mapRowsDistributed(in, out, rowFn, dt), SwiftStrategy.Local)
-      case None => finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
-    }
+    val d =
+      if (cfg.forceParallel) decided(SwiftStrategy.Parallel, SwiftProbe.NoCandidate)
+      else choose(sample, rowFn, oracle, vectorized)
+    finish(d.route match {
+      case SwiftStrategy.Vectorized => df.withColumn(out, vectorized.get)
+      case SwiftStrategy.Local => mapRowsDistributed(localInput, out, rowFn, dt)
+      case SwiftStrategy.Parallel => mapRowsDistributed(df, out, rowFn, dt)
+    }, d)
   }
 
   /** Distributed row map with a dynamic output schema: typed Dataset map
@@ -326,19 +314,16 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
   /** O2 `raw=True` analog (swifter/swifter.py:400): the row function sees
     * a plain Seq[Double] of the selected columns — the ndarray-row fast
     * path, no per-element name lookup. Routed through the ordinary O1
-    * selector on a packed array column. */
+    * selector on a packed array column, whose decision the result keeps. */
   def applyRawNumeric(cols: Seq[String], out: String)(
       fn: Seq[Double] => Double,
       vectorized: Option[Column] = None): DataFrame = {
     val tmp = "__swift_raw"
     val withArr = df.withColumn(tmp, array(cols.map(c => col(c).cast("double")): _*))
-    val inner = new Swift(withArr, cfg)
     // collection.Seq: Spark materializes array columns as mutable.ArraySeq,
     // which is not a scala.collection.immutable.Seq in 2.13
-    val res = inner.applyScalar[scala.collection.Seq[Double], Double](tmp, out)(
-      xs => fn(xs.toSeq), vectorized)
-    lastStrategy = inner.lastStrategy
-    res.drop(tmp)
+    new Swift(withArr, cfg).applyScalar[scala.collection.Seq[Double], Double](tmp, out)(
+      xs => fn(xs.toSeq), vectorized).drop(tmp)
   }
 
   /** Scheduler knob for API parity with `set_dask_scheduler`
@@ -361,7 +346,6 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     * with one output column per input column. */
   def applyColumns(cols: Seq[String])(aggFn: Column => Column,
       suffix: String = ""): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     df.agg(
       aggFn(col(cols.head)).as(cols.head + suffix),
       cols.tail.map(c => aggFn(col(c)).as(c + suffix)): _*)
@@ -382,7 +366,6 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
       s"applyColumnsLocal is driver-local (the reference never parallelizes " +
       s"axis=0); input has $nrows rows > maxRows=$maxRows — express the " +
       "function as a Column aggregate via applyColumns to run distributed")
-    lastStrategy = SwiftStrategy.Local
     val rows = df.select(cols.map(col).toIndexedSeq: _*).collect()
     val outVals = cols.indices.map(i => fn(rows.toIndexedSeq.map(_.get(i))))
     val schema = StructType(cols.zipWithIndex.map { case (c, i) =>
@@ -412,24 +395,19 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
       }: _*)
 
     // without a candidate there is nothing to probe: Parallel, no preview
-    if (cfg.forceParallel || vectorized.isEmpty || preview.n == 0)
-      return finish(project(theUdf(_)), SwiftStrategy.Parallel)
+    if (cfg.forceParallel || vectorized.isEmpty)
+      return finish(project(theUdf(_)), SwiftDecision.fixedParallel)
+    if (preview.n == 0)
+      return finish(project(theUdf(_)), decided(SwiftStrategy.Parallel, SwiftProbe.NoCandidate))
 
-    vectorized.foreach { vec =>
-      val sample = sampleRows()
-      val probeCol = cols.head
-      val idx = df.schema.fieldIndex(probeCol)
-      val oracle = Progress.suppressed { sample.toSeq.map(r => rowFn(r.getAs[T](idx))) }
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec(col(probeCol)).as("p"))
-            .collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(project(vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () }
-    }
-    finish(project(theUdf(_)), SwiftStrategy.Parallel)
+    // no Local route here, so no K3: the probe alone picks the route
+    val vec = vectorized.get
+    val sample = sampleRows()
+    val onRow = scalarOn(df.schema.fieldIndex(cols.head), rowFn)
+    val oracle = Progress.suppressed { sample.toSeq.map(onRow) }
+    val k2 = probe(sample, vec(col(cols.head)), oracle)
+    if (k2 == SwiftProbe.Accepted) finish(project(vec), decided(SwiftStrategy.Vectorized, k2))
+    else finish(project(theUdf(_)), decided(SwiftStrategy.Parallel, k2))
   }
 
   // =====================================================================
@@ -516,14 +494,12 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     * leading rows yield null, exactly pandas' NaN head. */
   def shift(valueCol: String, periods: Int, orderBy: Seq[String],
       partitionBy: Seq[String] = Nil, out: String = "shifted"): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     df.withColumn(out, lag(col(valueCol), periods).over(lagSpec(orderBy, partitionBy)))
   }
 
   /** pandas `diff(periods)`: x − shift(x, periods). */
   def diff(valueCol: String, periods: Int, orderBy: Seq[String],
       partitionBy: Seq[String] = Nil, out: String = "diffed"): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     val prev = lag(col(valueCol), periods).over(lagSpec(orderBy, partitionBy))
     df.withColumn(out, col(valueCol) - prev)
   }
@@ -537,14 +513,12 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     * every SQL engine agrees on. */
   def pctChange(valueCol: String, periods: Int, orderBy: Seq[String],
       partitionBy: Seq[String] = Nil, out: String = "pct"): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     val prev = lag(col(valueCol), periods).over(lagSpec(orderBy, partitionBy))
     df.withColumn(out, col(valueCol) / nullif(prev, lit(0.0)) - lit(1.0))
   }
 
   /** pandas `fillna(value)`: nulls → the fill value (pure projection). */
   def fillna(valueCol: String, fill: Double, out: String = "filled"): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     df.withColumn(out, coalesce(col(valueCol), lit(fill)))
   }
 
@@ -553,7 +527,6 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     * through like pandas NaN. */
   def clip(valueCol: String, lower: Double, upper: Double,
       out: String = "clipped"): DataFrame = {
-    lastStrategy = SwiftStrategy.Vectorized
     df.withColumn(out, least(greatest(col(valueCol), lit(lower)), lit(upper)))
   }
 

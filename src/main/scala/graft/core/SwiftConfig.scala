@@ -5,10 +5,10 @@ package graft.core
   * base.py:21-22,60).
   *
   * Divergences from the reference, on purpose:
-  *  - `allowParallelOnStrings` defaults to TRUE: the reference's guard
+  *  - no K4 string guard: the reference's `allow_dask_on_strings`
   *    (swifter/swifter.py:303) exists because Dask's process scheduler
   *    pickles Python string objects; Spark's Tungsten UTF8String has no
-  *    such cliff (SURVEY.md §4.2).
+  *    such cliff (SURVEY.md §4.2), so strings route like any other type.
   *  - the driver-local route runs only on rows already on the driver: in
   *    the reference all data is in driver memory, so "local" is free; here
   *    it is taken only when the selector's one-job preview holds every row
@@ -33,11 +33,6 @@ final case class SwiftConfig(
     sampleSeed: Long = 42L,
     /** K3 — timing repeats (reference N_REPEATS=3, base.py:22). */
     nRepeats: Int = 3,
-    /** K8 — console progress via SparkListener. */
-    progressBar: Boolean = false,
-    progressDesc: String = "swift",
-    /** K4 — string-dtype guard knob, kept for API parity. */
-    allowParallelOnStrings: Boolean = true,
     /** K9 — bypass the selector entirely (swifter/swifter.py:131-138). */
     forceParallel: Boolean = false,
     /** Upper bound on rows for the driver-local route (see note above);
@@ -73,4 +68,34 @@ object SwiftStrategy {
   case object Parallel extends SwiftStrategy
   /** Driver-local execution over a LocalRelation (tiny inputs). */
   case object Local extends SwiftStrategy
+}
+
+/** What the K2 probe found for one call. */
+sealed trait SwiftProbe
+object SwiftProbe {
+  /** No candidate was probed: the call gave none, or fixed its route
+    * before K2 (`forceParallel`, an empty input). */
+  case object NoCandidate extends SwiftProbe
+  /** The candidate matched the row function on every sampled row. */
+  case object Accepted extends SwiftProbe
+  /** The candidate differed from the row function on some sampled row. */
+  case object Mismatch extends SwiftProbe
+  /** Evaluating the candidate on the sample threw `exceptionClass`. */
+  final case class Threw(exceptionClass: String) extends SwiftProbe
+}
+
+/** One selector decision, carried on the plan of the Dataset the call
+  * returned; read it with [[Swift.decisions]].
+  *
+  * @param n      input row count; None when the route was fixed before the
+  *               preview ran (`forceParallel`)
+  * @param estSec K3's extrapolated driver time; None when K3 did not run
+  */
+final case class SwiftDecision(route: SwiftStrategy, probe: SwiftProbe, n: Option[Long],
+    estSec: Option[Double])
+
+object SwiftDecision {
+  /** Parallel, fixed before the preview ran (`forceParallel`, or
+    * `applymap` without a candidate): no n, no probe. */
+  val fixedParallel: SwiftDecision = SwiftDecision(SwiftStrategy.Parallel, SwiftProbe.NoCandidate, None, None)
 }

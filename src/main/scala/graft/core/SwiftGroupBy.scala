@@ -106,18 +106,19 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
   def apply(outSchema: StructType)(
       fn: (Row, Iterator[Row]) => Iterator[Row]): DataFrame = {
     val in0 = inputDf
+    val local = sw.nrows <= sw.cfg.groupbyLocalMaxRows
     val in =
-      if (sw.nrows <= sw.cfg.groupbyLocalMaxRows) {
-        sw.lastStrategy = SwiftStrategy.Local
-        df.sparkSession.createDataFrame(in0.collect().toSeq.asJava, in0.schema)
-      } else { sw.lastStrategy = SwiftStrategy.Parallel; in0 }
+      if (local) df.sparkSession.createDataFrame(in0.collect().toSeq.asJava, in0.schema)
+      else in0
 
     val keySchema = StructType(by.map(c => in.schema(c)))
     val keyIdx = by.map(in.schema.fieldIndex).toArray
     val keyEnc = Encoders.row(keySchema)
     val outEnc = Encoders.row(outSchema)
-    in.groupByKey(r => Row.fromSeq(keyIdx.toSeq.map(r.get)))(keyEnc)
-      .flatMapGroups((k: Row, it: Iterator[Row]) => fn(k, it))(outEnc)
+    Swift.record(in.groupByKey(r => Row.fromSeq(keyIdx.toSeq.map(r.get)))(keyEnc)
+      .flatMapGroups((k: Row, it: Iterator[Row]) => fn(k, it))(outEnc),
+      SwiftDecision(if (local) SwiftStrategy.Local else SwiftStrategy.Parallel,
+        SwiftProbe.NoCandidate, Some(sw.nrows), None))
   }
 
   /** K6 variant of [[apply]]: the result schema is inferred by running
@@ -179,7 +180,6 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
     * aggregate — the `Aggregator` fast path of SURVEY.md §2.1/O4. Stays
     * fully in Catalyst (partial aggregation map-side, codegen). */
   def agg(exprs: Column*): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     appearanceIndex match {
       case None => inputDf.groupBy(by.map(col).toIndexedSeq: _*)
         .agg(exprs.head, exprs.tail: _*)
@@ -205,7 +205,6 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
     * (e.g. a cast or a per-row combination with the group value). */
   def transform(aggExpr: Column, out: String,
       post: Column => Column = identity): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val w = org.apache.spark.sql.expressions.Window.partitionBy(by.map(col): _*)
     df.withColumn(out, post(aggExpr.over(w)))
   }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.QueryExecution
 
 /** The selector's one look at its input: the row count (K3) and the probe
-  * sample (K1) from a single Spark job with no exchange.
+  * sample (K1) from a single Spark job with no exchange; also the K3
+  * estimate and the Local rule every choosing call shares.
   *
   * Every input row gets a uniform 64-bit key from an RNG seeded with the
   * sample seed and the partition index. Each partition returns its row count
@@ -39,6 +40,28 @@ private[core] final class SwiftPreview(val n: Long, val rows: Array[InternalRow]
 
   /** True when [[rows]] holds every input row (n <= size). */
   def complete: Boolean = rows.length == n
+
+  /** K3 — `pass` (the row function over [[sample]]) timed `repeats` times,
+    * the mean extrapolated from k rows to n: the estimated driver time of
+    * the whole input (swifter/swifter.py:319-322). */
+  def estimateSec(repeats: Int)(pass: => Unit): Double = {
+    if (k == 0) return 0.0
+    var total = 0L
+    var i = 0
+    while (i < repeats) {
+      val t0 = System.nanoTime(); pass; total += System.nanoTime() - t0; i += 1
+    }
+    (total.toDouble / repeats / 1e9) / k * n
+  }
+
+  /** The Local rule: K3's estimate is within the threshold AND [[rows]]
+    * already holds every input row (n <= sampleSize, and n <=
+    * localMaxRows), so the local plan runs on rows already on the driver.
+    * A larger input goes Parallel: collecting it again and re-planning it
+    * as a LocalRelation costs more than the distributed job saves
+    * (SCALING.md, "Selector route regret"). */
+  def runsLocal(estSec: Double, cfg: SwiftConfig): Boolean =
+    estSec <= cfg.thresholdSec && complete && n <= cfg.localMaxRows
 }
 
 private[core] object SwiftPreview {

@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.encoders.encoderFor
   * `Dataset[T]` where compile-time field checks help). The vectorized
   * strategy needs a Column form and lives on the untyped API; here the
   * selector chooses between the distributed typed map and the
-  * driver-local route (K3), preserving the same invisibility contract.
+  * driver-local route with the same K3 estimate and Local rule
+  * ([[SwiftPreview]]), preserving the same invisibility contract; the
+  * decision is read with [[Swift.decisions]].
   */
 final class SwiftTyped[T](ds: Dataset[T], cfg: SwiftConfig) {
 
@@ -16,31 +18,22 @@ final class SwiftTyped[T](ds: Dataset[T], cfg: SwiftConfig) {
   def forceParallel(b: Boolean = true): SwiftTyped[T] =
     new SwiftTyped(ds, cfg.copy(forceParallel = b))
 
-  @volatile var lastStrategy: SwiftStrategy = SwiftStrategy.Parallel
-
   def apply[U: Encoder](f: T => U): Dataset[U] = {
-    if (cfg.forceParallel) { lastStrategy = SwiftStrategy.Parallel; return ds.map(f) }
+    if (cfg.forceParallel) return Swift.record(ds.map(f), SwiftDecision.fixedParallel)
     val p = SwiftPreview(ds.queryExecution, cfg.sampleSize, cfg.sampleSeed)
-    if (p.n == 0) { lastStrategy = SwiftStrategy.Parallel; return ds.map(f) }
+    if (p.n == 0)
+      return Swift.record(ds.map(f),
+        SwiftDecision(SwiftStrategy.Parallel, SwiftProbe.NoCandidate, Some(0L), None))
     val fromInternal = encoderFor(ds.encoder)
       .resolveAndBind(ds.queryExecution.analyzed.output).createDeserializer()
     val sample = p.sample.toIndexedSeq.map(fromInternal)
-    val estSec = {
-      var total = 0L
-      var i = 0
-      while (i < cfg.nRepeats) {
-        val t0 = System.nanoTime()
-        Progress.suppressed { sample.foreach(f) }
-        total += System.nanoTime() - t0; i += 1
-      }
-      (total.toDouble / cfg.nRepeats / 1e9) / math.max(1, sample.length) * p.n
-    }
-    // local only when the preview already holds every row (see Swift.localInput)
-    if (estSec <= cfg.thresholdSec && p.complete && p.n <= cfg.localMaxRows) {
-      lastStrategy = SwiftStrategy.Local
-      val all: Seq[U] = p.rows.toIndexedSeq.map(r => f(fromInternal(r)))
-      ds.sparkSession.createDataset(all)
-    } else { lastStrategy = SwiftStrategy.Parallel; ds.map(f) }
+    val estSec = p.estimateSec(cfg.nRepeats)(Progress.suppressed { sample.foreach(f) })
+    val local = p.runsLocal(estSec, cfg)
+    Swift.record(
+      if (local) ds.sparkSession.createDataset(p.rows.toIndexedSeq.map(r => f(fromInternal(r))))
+      else ds.map(f),
+      SwiftDecision(if (local) SwiftStrategy.Local else SwiftStrategy.Parallel,
+        SwiftProbe.NoCandidate, Some(p.n), Some(estSec)))
   }
 }
 

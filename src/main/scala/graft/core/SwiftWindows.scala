@@ -25,7 +25,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * `sum(col("value"))`), `post` an optional scalar transform applied
     * AFTER the OVER clause (e.g. a cast). */
   def agg(aggExpr: Column, out: String, post: Column => Column = identity): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     withMinPeriods(sw.df, out, post(aggExpr.over(spec)))
   }
 
@@ -35,7 +34,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * functions. */
   def apply(valueCol: String, out: String, outType: DataType)(
       fn: Seq[Double] => Any): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Parallel
     val theUdf = SwiftRolling.dynamicUdf(fn, outType)
     val frame = collect_list(col(valueCol)).over(spec)
     withMinPeriods(sw.df, out, theUdf(frame))
@@ -49,7 +47,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * Prefer this path; the `outType` overload remains for non-numeric
     * experiments. */
   def apply(valueCol: String, out: String)(fn: Seq[Double] => Double): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Parallel
     val fnUdaf = udaf(new RollingApplyAgg(fn), org.apache.spark.sql.Encoders.scalaDouble)
     withMinPeriods(sw.df, out, fnUdaf(col(valueCol)).over(spec))
   }
@@ -63,7 +60,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * in both engines) followed by two IEEE divisions in fixed order.
     * Frames with fewer than max(min_periods, 2) rows yield null. */
   def cov(xCol: String, yCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // pairwise-complete: a row contributes only when BOTH inputs are
     // set (pandas NaN handling) — masking keeps Σx/Σy/Σxy/n consistent
@@ -100,7 +96,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * a zero-variance side yield null (pandas NaN). */
   def corr(xCol: String, yCol: String, out: String,
       scale: Long = 1000000L): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val digits = math.log10(scale.toDouble).round.toInt
     // pairwise-complete masking, same contract as [[cov]]
@@ -137,7 +132,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * order. Frames with n < max(min_periods, 3) (or zero variance)
     * yield null, matching pandas NaN. */
   def skew(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long").cast(d38)
@@ -174,7 +168,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * IEEE tail (mirrored op order): c∕(a·a), then the two affine steps.
     * Frames with n < max(min_periods, 4) or zero variance yield null. */
   def kurt(valueCol: String, out: String, scale: Long = 10000L): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val digits = math.log10(scale.toDouble).round.toInt
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, digits))
@@ -201,7 +194,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * [[skew]]/[[kurt]] (micro-units). One sqrt over three IEEE divisions
     * in mirrored order. n < max(min_periods, 2) yields null. */
   def sem(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long").cast(d38)
@@ -220,7 +212,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * unlike native `var_samp`, whose streaming-moment accumulation order
     * is engine-specific. n < max(min_periods, 2) yields null. */
   def varStd(valueCol: String, varOut: String, stdOut: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long").cast(d38)
@@ -241,7 +232,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * final ÷2·10⁶ — bit-mirrorable, unlike interpolation-order-dependent
     * native percentile implementations. */
   def median(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long")
     val sorted = sort_array(collect_list(xm).over(spec))
@@ -261,7 +251,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * frame as [[median]] (the engine computes the window list once; the
     * two medians are projections over it). */
   def mad(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long")
     val sorted = sort_array(collect_list(xm).over(spec))
@@ -284,7 +273,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * rational contract is the reproducibility boundary.) */
   def quantile(valueCol: String, num: Int, den: Int, out: String): DataFrame = {
     require(den > 0 && num >= 0 && num <= den, s"quantile $num/$den outside [0,1]")
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val xm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long")
     val sorted = sort_array(collect_list(xm).over(spec))
@@ -308,7 +296,6 @@ final class SwiftRolling(sw: Swift, spec: WindowSpec, minPeriods: Int) {
     * comparisons are exact); the ÷2 over a small integer is the one
     * IEEE op. */
   def rank(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val arr = collect_list(col(valueCol)).over(spec)
     val cur = col(valueCol)
     val lt = size(filter(arr, e => e < cur))
@@ -364,7 +351,6 @@ final class SwiftRollingWeighted(sw: Swift, spec: WindowSpec, window: Int,
 
   /** Weighted rolling mean of `valueCol` over the count window. */
   def mean(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     // exact micro-units: DECIMAL(20,6) × 10⁶ is integer-valued, the cast
     // to BIGINT lossless — every weight·value product and the running sum
     // stay in exact integer arithmetic
@@ -537,7 +523,6 @@ final class SwiftEwm(sw: Swift, spec: WindowSpec, microWeights: Seq[Long]) {
   /** EWM mean of `valueCol`; frame values arrive oldest→newest, so the
     * weight vector is the first-m prefix reversed (newest gets w₀). */
   def mean(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val vm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long")
     val vals = collect_list(vm).over(spec)
@@ -569,7 +554,6 @@ final class SwiftEwm(sw: Swift, spec: WindowSpec, microWeights: Seq[Long]) {
     * denominator then ÷10¹², in that order, mirrored by the oracle.
     * Frames with < 2 values yield null (pandas NaN). */
   def variance(valueCol: String, out: String): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val vm = (col(valueCol).cast(org.apache.spark.sql.types.DecimalType(20, 6))
       * lit(1000000L)).cast("long")
@@ -842,7 +826,6 @@ final class SwiftResample(sw: Swift, rule: String, tsCol: String,
 
   /** Built-in aggregates per bucket; output column `bucket` = bin start. */
   def agg(exprs: Column*): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Vectorized
     bucketed.groupBy(groupCols: _*)
       .agg(exprs.head, exprs.tail: _*)
   }
@@ -863,7 +846,6 @@ final class SwiftResample(sw: Swift, rule: String, tsCol: String,
       post: Column => Column = identity): DataFrame = {
     require(partitionBy.isEmpty,
       "ffill is the single-series form; partition per series upstream")
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val base = bucketed.groupBy(col("__bucket").as("bucket"))
       .agg(post(aggExpr).as("__v"), count(lit(1)).as("__n"))
     val spine = base.agg(min(col("bucket")).as("__mn"), max(col("bucket")).as("__mx"))
@@ -884,7 +866,6 @@ final class SwiftResample(sw: Swift, rule: String, tsCol: String,
       post: Column => Column = identity): DataFrame = {
     require(partitionBy.isEmpty,
       "bfill is the single-series form; partition per series upstream")
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val base = bucketed.groupBy(col("__bucket").as("bucket"))
       .agg(post(aggExpr).as("__v"), count(lit(1)).as("__n"))
     val spine = base.agg(min(col("bucket")).as("__mn"), max(col("bucket")).as("__mx"))
@@ -909,7 +890,6 @@ final class SwiftResample(sw: Swift, rule: String, tsCol: String,
       post: Column => Column = identity): DataFrame = {
     require(partitionBy.isEmpty,
       "interpolate is the single-series form; partition per series upstream")
-    sw.lastStrategy = SwiftStrategy.Vectorized
     val base = bucketed.groupBy(col("__bucket").as("bucket"))
       .agg(post(aggExpr).as("__v"), count(lit(1)).as("__n"))
     val spine = base.agg(min(col("bucket")).as("__mn"), max(col("bucket")).as("__mx"))
@@ -934,7 +914,6 @@ final class SwiftResample(sw: Swift, rule: String, tsCol: String,
   /** Arbitrary per-bucket function over the bucket's values. */
   def apply(valueCol: String, out: String, outType: DataType)(
       fn: Seq[Double] => Any): DataFrame = {
-    sw.lastStrategy = SwiftStrategy.Parallel
     val theUdf = SwiftRolling.dynamicUdf(fn, outType)
     bucketed.groupBy(groupCols: _*)
       .agg(collect_list(col(valueCol)).as("__vals"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.scalacheck.Gen
@@ -26,9 +26,8 @@ class ConfigPropertySpec extends SparkSpec {
 
   test("O7: parallel accessor never takes the driver-local route") {
     val d = (1 to 50).map(i => (i.toLong, i * 1.0)).toDF("id", "x")
-    val sw = SwiftParallel(d)
-    sw.applyScalar[Double, Double]("x", "y")(v => v + 1)
-    assert(sw.lastStrategy == SwiftStrategy.Parallel)
+    val out = SwiftParallel(d).applyScalar[Double, Double]("x", "y")(v => v + 1)
+    assert(Swift.decisions(out).map(_.route) == Seq(SwiftStrategy.Parallel))
   }
 
   test("K6: convert_dtype=False leaves the dynamic result as opaque strings") {
@@ -201,52 +200,65 @@ class ConfigPropertySpec extends SparkSpec {
   test("property: selector strategies agree on arbitrary inputs (ScalaCheck gens, seeded)") {
     // every apply surface, at sizes on both sides of the preview's capacity
     // (sampleSize), under every forced route, with and without a candidate:
-    // the same sorted rows, and all three routes taken somewhere
+    // the same sorted rows, and all three routes taken somewhere. Two inputs
+    // have about 1 row in 7 null: a null input gives a null output on every
+    // route, and a correct candidate still passes K2
     val sampleSize = SwiftConfig().sampleSize
     val fn: Double => Double = v => if (v < 0) -v else v * 2
     val vecOf: Column => Column = c => when(c < 0, -c).otherwise(c * 2)
+    val rowFn: Row => Any = r => if (r.isNullAt(1)) null else fn(r.getDouble(1))
     val handles: Seq[(String, Swift => Swift)] = Seq(
       "default" -> identity, "forceParallel" -> (_.forceParallel()),
       "threshold(0)" -> (_.threshold(0)), "threshold(1e9)" -> (_.threshold(1e9)))
-    val typedHandles: Seq[SwiftTyped[P] => SwiftTyped[P]] = Seq(
+    val typedHandles: Seq[SwiftTyped[PX] => SwiftTyped[PX]] = Seq(
       identity, _.forceParallel(), _.threshold(0), _.threshold(1e9))
     val routes = scala.collection.mutable.Set.empty[SwiftStrategy]
-    def sorted(out: DataFrame): Seq[(Long, Double)] =
-      out.select("id", "y").as[(Long, Double)].collect().toSeq.sorted
+    def sorted(out: DataFrame): Seq[(Long, Option[Double])] =
+      out.select("id", "y").as[(Long, Option[Double])].collect().toSeq.sortBy(_._1)
 
-    Seq(5, sampleSize, sampleSize + 1, 5000).zipWithIndex.foreach { case (n, trial) =>
+    val trials = Seq(5, sampleSize, sampleSize + 1, 5000).map(_ -> false) ++
+      Seq(sampleSize, 5000).map(_ -> true)
+    trials.zipWithIndex.foreach { case ((n, nulls), trial) =>
       val xs = Gen.listOfN(n, Gen.chooseNum(-1e6, 1e6))(Gen.Parameters.default, Seed(42L + trial)).get
-      val expect = xs.zipWithIndex.map { case (x, i) => (i.toLong, fn(x)) }.sorted
+        .zipWithIndex.map { case (x, i) => if (nulls && i % 7 == 3) None else Some(x) }
+      val expect = xs.zipWithIndex.map { case (x, i) => (i.toLong, x.map(fn)) }
       val d = xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("id", "x")
       for ((hn, h) <- handles; vec <- Seq(false, true)) {
         val calls: Seq[(String, Swift => DataFrame)] = Seq(
           "applyScalar" -> (_.applyScalar[Double, Double]("x", "y")(fn,
             if (vec) Some(vecOf(col("x"))) else None)),
-          "applyRows" -> (_.applyRows("y")(r => fn(r.getDouble(1)),
+          "applyRows" -> (_.applyRows("y")(rowFn,
             vectorized = if (vec) Some(vecOf(col("x"))) else None)),
-          "applyRows(outType)" -> (_.applyRows("y")(r => fn(r.getDouble(1)),
+          "applyRows(outType)" -> (_.applyRows("y")(rowFn,
             vectorized = if (vec) Some(vecOf(col("x"))) else None, outType = Some(DoubleType))),
           "applymap" -> (_.applymap[Double, Double](fn,
             vectorized = if (vec) Some(vecOf) else None, columns = Seq("x"))
             .withColumnRenamed("x", "y")))
         for ((cn, call) <- calls) {
-          val sw = h(Swift(d))
-          assert(sorted(call(sw)) == expect, s"$cn diverges: n=$n $hn vec=$vec (${sw.lastStrategy})")
-          routes += sw.lastStrategy
+          val out = call(h(Swift(d)))
+          val route = Swift.decisions(out).map(_.route)
+          assert(sorted(out) == expect, s"$cn diverges: n=$n nulls=$nulls $hn vec=$vec ($route)")
+          routes ++= route
+          if (vec && hn != "forceParallel")
+            assert(route == Seq(SwiftStrategy.Vectorized), s"$cn: n=$n nulls=$nulls $hn")
           if (cn == "applyScalar" && hn == "threshold(1e9)" && !vec)
-            assert(sw.lastStrategy ==
-              (if (n <= sampleSize) SwiftStrategy.Local else SwiftStrategy.Parallel),
+            assert(route ==
+              Seq(if (n <= sampleSize) SwiftStrategy.Local else SwiftStrategy.Parallel),
               s"n=$n: the local route needs every row in the preview")
         }
       }
-      val ds = xs.zipWithIndex.map { case (x, i) => P(i.toLong, x) }.toDS()
+      val ds = xs.zipWithIndex.map { case (x, i) => PX(i.toLong, x) }.toDS()
       typedHandles.foreach { h =>
-        val sw = h(SwiftTyped(ds))
-        val got = sw.apply((p: P) => (p.id, fn(p.x))).collect().toSeq.sorted
-        assert(got == expect, s"SwiftTyped diverges: n=$n (${sw.lastStrategy})")
-        routes += sw.lastStrategy
+        val out = h(SwiftTyped(ds)).apply((p: PX) => (p.id, p.x.map(fn)))
+        val route = Swift.decisions(out).map(_.route)
+        assert(out.collect().toSeq.sortBy(_._1) == expect, s"SwiftTyped diverges: n=$n ($route)")
+        routes ++= route
       }
     }
     assert(routes == Set(SwiftStrategy.Vectorized, SwiftStrategy.Parallel, SwiftStrategy.Local))
   }
+
 }
+
+/** Typed-facade input with a nullable field, for the route-agreement property. */
+case class PX(id: Long, x: Option[Double])

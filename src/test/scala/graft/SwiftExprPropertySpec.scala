@@ -72,10 +72,10 @@ class SwiftExprPropertySpec extends SparkSpec {
     // negatives, and the NaN feeding BOTH sides of an If comparison
     val term = iff(fld("x") / fld("y") > num(0.0),
       log_(fld("x")), fld("x") / fld("y"))
-    val sw = Swift(hazardDf)
-    val out = sw.applyExpr("r")(term).orderBy("id").collect()
-    assert(sw.lastStrategy == graft.core.SwiftStrategy.Vectorized,
+    val applied = Swift(hazardDf).applyExpr("r")(term)
+    assert(Swift.decisions(applied).map(_.route) == Seq(graft.core.SwiftStrategy.Vectorized),
       "true-twin Column form must survive the K2 probe")
+    val out = applied.orderBy("id").collect()
     out.foreach { row =>
       val expect = term.eval(row)
       assert(!row.isNullAt(row.fieldIndex("r")))
