@@ -26,9 +26,22 @@ object SessionDefaults {
     *    −33% total-wall change). Entries hold weak-referenced compiled
     *    classes, so 4096 entries is bounded metaspace, not corpus-scale
     *    state.
+    *  - `spark.sql.artifact.isolation.enabled = false`: Spark keys that
+    *    cache on (context class loader, generated source), and with
+    *    isolation on (the default) each session's tasks run under the
+    *    session's own artifact class loader, so every session recompiles
+    *    byte-identical classes — the source does not differ, the loader
+    *    does. The engine adds no per-session artifacts (jars, files,
+    *    classes), so the per-session loader isolates nothing here.
+    *    Measured on 4 vCPUs: a warm `apply_selector` pass on a fresh
+    *    `newSession()` compiled 41 classes with isolation on and 0 with it
+    *    off, and freshly loaded classes also start cold in the JIT.
+    *    Spark reads it only when a session is created, so it belongs on
+    *    the builder; `newSession()` sessions take it from the context.
     */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** The entry points' local session on `cpus` cores: [[apply]] plus one
     * shuffle partition per core, UTC session time, and

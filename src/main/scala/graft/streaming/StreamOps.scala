@@ -90,7 +90,7 @@ object StreamOps {
   def resampleOnce(spark: SparkSession, dir: String, rule: String,
       sinkName: String = "stream_resample_sink"): DataFrame = {
     val tmp = linkedDir(dir, "events")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/events.parquet")
     // normalizeTs handles whichever physical ts encoding this round's
     // generator shipped (raw nanos long / TIMESTAMP_NTZ / timestamp) —
     // a pure projection, so it composes with the streaming source.
@@ -162,7 +162,7 @@ object StreamOps {
   def dedupOnce(spark: SparkSession, dir: String, keyCols: Seq[String],
       sinkName: String = "stream_dedup_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     // see resampleOnceMem: size state partitions to the workload, not CPUs
     withHarnessConf(spark, "4") { ckpt =>
@@ -204,13 +204,13 @@ object StreamOps {
         .withColumn("nd", size(col("ds")).cast("long"))
         .withColumn("bands", bands(minhash_sig(col("ds"))))
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     // cached (tracked, see graft.core.Caches): the static side of a
     // stream-static join is re-planned EVERY microbatch — the cache both
     // avoids re-shingling the history per batch and keeps measured stats
     // for the per-batch join strategy
     val hist = graft.core.Caches.cached(
-      shingled(spark.read.parquet(s"$dir/documents.parquet")
+      shingled(graft.queries.Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % histMod =!= 0)))
     val histIdx = hist.select(col("id").as("match_id"),
       col("ds").as("dsh"), col("nd").as("nh"),
@@ -291,8 +291,8 @@ object StreamOps {
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val ev = grams(spark.read.parquet(s"$dir/documents.parquet")
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
+    val ev = grams(graft.queries.Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod === 0))
       .select(col("g")).distinct()
     val src = spark.readStream.schema(schema).parquet(tmp)
@@ -328,8 +328,8 @@ object StreamOps {
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val tr = grams(spark.read.parquet(s"$dir/documents.parquet")
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
+    val tr = grams(graft.queries.Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod =!= 0))
       .select(col("g")).distinct().withColumn("hit", lit(1L))
     val src = spark.readStream.schema(schema).parquet(tmp)
@@ -361,7 +361,7 @@ object StreamOps {
   def cdcChunksOnce(spark: SparkSession, dir: String, n: Int, modK: Int,
       sinkName: String = "stream_cdc_chunks_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.Chunking.cdcChunks(src, "doc_id", "text", n, modK)
     withHarnessConf(spark, "4") { ckpt =>
@@ -385,7 +385,7 @@ object StreamOps {
       patterns: Seq[(String, String)],
       sinkName: String = "stream_pii_stats_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val agg = graft.operators.TextAnalysis.piiStats(src, "source", "text", patterns)
     withHarnessConf(spark, "4") { ckpt =>
@@ -409,7 +409,7 @@ object StreamOps {
       minWords: Int, minLines: Int, badWords: Seq[String],
       sinkName: String = "stream_clean_lines_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.TextAnalysis.cleanLines(
       graft.operators.TextAnalysis.segmentLines(src, "doc_id", "text", wordsPerLine),
@@ -436,7 +436,7 @@ object StreamOps {
   def winnowOnce(spark: SparkSession, dir: String, w: Int,
       sinkName: String = "stream_winnow_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.TextAnalysis.winnow(src, "doc_id", "text", w)
     withHarnessConf(spark, "4") { ckpt =>
@@ -461,7 +461,7 @@ object StreamOps {
       table: Seq[Long], buckets: Int,
       sinkName: String = "stream_dsir_score_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.Mixture.importanceScore(
       src, "doc_id", "text", table, buckets)
@@ -493,7 +493,7 @@ object StreamOps {
     require(dims % subspaces == 0,
       s"dims ($dims) must divide evenly into subspaces ($subspaces)")
     val sub = dims / subspaces
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = graft.queries.Tables.t(spark, dir, "embeddings")
     val cbRows = graft.operators.Similarity
       .pqCodebook(graft.operators.Similarity.fixedPoint(
         batch, "vec_id", "embedding"), subspaces, codebookK, sub)
@@ -519,7 +519,7 @@ object StreamOps {
     require(dims % subspaces == 0,
       s"dims ($dims) must divide evenly into subspaces ($subspaces)")
     val sub = dims / subspaces
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = graft.queries.Tables.t(spark, dir, "embeddings")
     // Shared trained-book memo (Similarity.pqCodebookTrainedShared): the
     // streaming encoder loads the SAME collected artifact the batch
     // searchers train — one Lloyd run per (source, params) per session
@@ -542,7 +542,7 @@ object StreamOps {
     require((0 until subspaces).forall(byM.contains),
       "codebook is missing a subspace's codewords (empty embeddings " +
       "input?) — the plan-literal encoder needs >= 1 codeword per m")
-    val batchSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    val batchSchema = graft.queries.Tables.schema(spark, s"$dir/embeddings.parquet")
     val tmp = linkedDir(dir, "embeddings")
     val src = spark.readStream.schema(batchSchema).parquet(tmp)
     val fx = graft.operators.Similarity.fixedPoint(src, "vec_id", "embedding")
@@ -596,7 +596,7 @@ object StreamOps {
     require(k >= 1 && k <= 64,
       s"k must be in [1, 64] for the plan-literal encoder (got $k); " +
       "beyond 64 use the batch kMeansAssign's broadcast-join shape")
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = graft.queries.Tables.t(spark, dir, "embeddings")
     val cents = graft.operators.Similarity
       .pqCodebookTrainedShared(graft.operators.Similarity.fixedPoint(
         batch, "vec_id", "embedding"), 1, k, dims, iters)
@@ -643,7 +643,7 @@ object StreamOps {
     * aggregating the emitted counts per source reproduces it exactly. */
   def oovTagOnce(spark: SparkSession, dir: String, k: Int,
       sinkName: String = "stream_oov_sink"): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/documents.parquet")
+    val batch = graft.queries.Tables.t(spark, dir, "documents")
     val vocab = graft.operators.TextAnalysis.vocab(batch, "text", k)
       .collect().map(_.getString(0)) // k strings — the bounded artifact
     val tmp = linkedDir(dir, "documents")
@@ -1811,7 +1811,7 @@ object StreamOps {
       sinkName: String = "stream_phrase_sink"): DataFrame = {
     require(phrases.nonEmpty, "need at least one phrase")
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val ws = split(col("text"), " ")
     val hits = array(phrases.map { ph =>
@@ -1849,7 +1849,7 @@ object StreamOps {
   def weightedSampleOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_weighted_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val ws = split(col("text"), " ")
     val w = size(array_distinct(ws)).cast("long").cast("double") /
@@ -1878,7 +1878,7 @@ object StreamOps {
   def vocabOnce(spark: SparkSession, dir: String, k: Int,
       sinkName: String = "stream_vocab_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val agg = src.select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
@@ -118,5 +119,23 @@ class CodegenCanarySpec extends SparkSpec {
     val cs = HE.ClassScoreArray(ref(longArr), Array(1L), Array.fill(8)(0L), 8)
     val proj = GenerateUnsafeProjection.generate(Seq(cs))
     assert(proj(new GenericInternalRow(Array[Any](null))).isNullAt(0))
+  }
+
+  // Spark keys its generated-class cache on (class loader, source). A
+  // session whose tasks run under its own artifact class loader misses
+  // on classes an earlier session compiled from the same source, so
+  // every fresh session would recompile them (about 12 classes per
+  // shuffle query).
+  test("a fresh session recompiles nothing an earlier fresh session compiled") {
+    def compiles(): Long = {
+      val s = spark.newSession()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Seq("o6_resample_ohlc", "o1_apply_vec").foreach { q =>
+        SparkEntry.queries(q)(s, sf001).write.format("noop").mode("overwrite").save()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    assert(compiles() === 0)
   }
 }

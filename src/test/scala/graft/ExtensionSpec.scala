@@ -16,12 +16,8 @@ class ExtensionSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[2]")
+      val s = graft.core.SessionDefaults.local(2)
         .appName("graft-ext-test")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .withExtensions(new graft.plans.GraftExtensions()(_))
         .getOrCreate()
       f(s) // do NOT stop: the SparkContext is shared with other suites

@@ -34,14 +34,11 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val tmp = java.nio.file.Files.createTempDirectory("spark-test").toString
     System.setProperty("derby.system.home", tmp)
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the engine's own session defaults, so tests run under the confs
+    // every entry point runs under
+    val s = graft.core.SessionDefaults.local(4)
       .appName("swifterspark-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

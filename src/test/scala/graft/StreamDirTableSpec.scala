@@ -45,6 +45,16 @@ class StreamDirTableSpec extends SparkSpec {
     }
   }
 
+  test("Tables.t on a directory table starts no job and reads the inferred schema") {
+    val d = dir // the respool's own jobs run outside the count
+    tables.foreach { t =>
+      val (df, jobs) = jobsDuring(Tables.t(spark, d, t))
+      assert(jobs === 0, t)
+      assert(df.schema === Tables.normalizeTs(
+        spark.read.parquet(s"$d/$t.parquet")).schema, t)
+    }
+  }
+
   test("resampleOnce on a directory table equals the batch resample") {
     val batch = Tables.t(spark, dir, "events")
       .groupBy(date_trunc("day", col("ts")).as("bucket"))

@@ -32,6 +32,17 @@ class TestdataDriftSpec extends SparkSpec {
     }
   }
 
+  test("Tables.t starts no Spark job and reads the schema inference would") {
+    val sf01 = s"${new java.io.File(sf001).getParent}/sf0.01"
+    for (dir <- Seq(sf001, sf01); (table, _) <- queries.Tables.expectedSchemas) {
+      val (df, jobs) = jobsDuring(queries.Tables.t(spark, dir, table))
+      assert(jobs === 0, s"$dir/$table")
+      val inferred = queries.Tables.normalizeTs(
+        spark.read.parquet(s"$dir/$table.parquet"))
+      assert(df.schema === inferred.schema, s"$dir/$table")
+    }
+  }
+
   test("events.ts lands as session-tz TimestampType after Tables.t") {
     val ts = queries.Tables.t(spark, sf001, "events").schema("ts").dataType
     assert(ts == TimestampType,
