@@ -1780,23 +1780,20 @@ object RelationalQueries {
       """SELECT l_orderkey, l_linenumber FROM lineitem l1
         |WHERE l_extendedprice >
         |  (SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(20,6))) AS DOUBLE) / count(*)
-        |   FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey)
-        |ORDER BY 1, 2""".stripMargin,
+        |   FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey)""".stripMargin,
     "rel_not_exists" ->
       """SELECT c_custkey, c_mktsegment FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
     "rel_grouping_sets" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(20,6))) AS DOUBLE) AS qty,
         |  count(*) AS n
         |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY 1, 2""".stripMargin,
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin,
     "rel_sql_api" ->
       s"""SELECT c_mktsegment, ${dsumSql("o_totalprice")} AS rev, count(*) AS n
          |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin,
     "rel_filter_pushdown" ->
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00' AND l_quantity < 10

@@ -17,27 +17,44 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Bench/harness streaming conf, applied around each bounded run:
+  /** Bench/harness streaming conf, applied around each bounded run and
+    * restored afterwards (a key that was unset is unset again):
     *  - state partitions sized to the key space (see resampleOnceMem);
     *  - no-data micro-batches OFF — every harness here sequences
     *    watermark advancement with explicit data batches (the two-sentinel
     *    pattern in [[sessionizeOnceEventTime]]), so the extra
     *    watermark-advance batches are pure per-batch state-store overhead;
-    *  - checkpoints on tmpfs when available: the HDFS-backed state store
-    *    fsyncs a delta file per partition per batch, which for a bounded
-    *    replay is measurement noise, not durability anyone needs. */
+    *  - checkpoint files written through Spark's
+    *    `FileSystemBasedCheckpointFileManager`. The default manager for a
+    *    `file:` path goes through Hadoop's `FileContext`, and on a host
+    *    without native Hadoop IO every rename forks a `readlink` process
+    *    (`RawLocalFileSystem.getFileLinkStatus`) and every create and
+    *    mkdir forks a `chmod`: about 1,100 processes per `stream_replay`
+    *    pass, most of `streaming.state_commit_ms` (SCALING.md, "Per-batch
+    *    fixed cost of a bounded replay"). `FileSystem.rename` resolves no
+    *    links. That manager's no-overwrite rename is check-then-rename,
+    *    not atomic against a second writer to the same directory; it is
+    *    safe here only because [[withHarnessConf]] always writes to a
+    *    fresh private temp dir. It must not become a session default:
+    *    user-chosen checkpoint locations keep Spark's default manager. */
   private def withStreamConf[T](spark: SparkSession, parts: String)(body: => T): T = {
     val conf = spark.conf
     val oldParts = conf.get("spark.sql.shuffle.partitions")
     val oldNoData = conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    val oldManager = conf.getOption(CheckpointManagerKey)
     conf.set("spark.sql.shuffle.partitions", parts)
     conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    conf.set(CheckpointManagerKey,
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     try body
     finally {
       conf.set("spark.sql.shuffle.partitions", oldParts)
       conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
+      oldManager.fold(conf.unset(CheckpointManagerKey))(conf.set(CheckpointManagerKey, _))
     }
   }
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Fresh checkpoint dir, on tmpfs when the host has one. */
   private def ckptDir(): java.nio.file.Path = {

@@ -101,6 +101,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Exchange rangepartitioning"), p)
   }
 
+  test("SQL-frontend queries without ORDER BY plan no global sort") {
+    for (q <- Seq("rel_sql_api", "rel_correlated", "rel_not_exists", "rel_grouping_sets")) {
+      val p = plan(q)
+      assert("Exchange rangepartitioning".r.findAllIn(p).size === 0, s"$q\n$p")
+    }
+  }
+
   test("Q3-style composite: filter pushed, partial agg, top-k no global sort") {
     val p = plan("rel_q3_shipping")
     assert(p.contains("TakeOrderedAndProject"), p)

@@ -36,6 +36,30 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(streamed.sameElements(batch))
   }
 
+  test("a bounded replay forks no readlink for its checkpoint and restores the manager conf") {
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = java.nio.file.Files.createTempFile("replay_procs", ".jfr")
+    try {
+      rec.start()
+      try StreamOps.ohlcOnce(spark, sf001, "proc_spec_sink").collect()
+      finally rec.stop()
+      rec.dump(dump)
+      val cmds = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).toSeq
+      val ckptReadlinks = cmds.filter(c => c.startsWith("readlink") && c.contains("graft_ckpt"))
+      assert(ckptReadlinks.size === 0,
+        s"of ${cmds.size} processes: ${ckptReadlinks.take(3)}")
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+    assert(spark.conf.getOption(key) == before)
+  }
+
   test("MemoryStream resample equals file-source streaming resample") {
     val viaFile = StreamOps.resampleOnce(spark, sf001, "1 day", "spec_file_sink")
       .orderBy("bucket").collect()
