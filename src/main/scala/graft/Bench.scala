@@ -249,16 +249,19 @@ object Bench {
     // 2/3 of the close-of-round wall. Warm cost is dominated by
     // per-query driver latency (planning, Janino, tiny-job scheduling),
     // not data, so the pass now runs the queries CONCURRENTLY from a
-    // small thread pool (Spark sessions are thread-safe for independent
-    // actions; each query runs exactly once, and sink temp dirs are
-    // keyed per (query-prefix, input-dir), so no two warm tasks share
-    // state). Batch barriers keep sweep() out of running queries'
-    // lineage — a sweep mid-flight could unpersist a checkpoint block a
-    // running warm query still needs. The pass is also BUDGET-aware: an
-    // unwarmed query is not a correctness risk, only a first-pass wall
-    // inflation the retime discipline (floor 1.0 s) already corrects,
-    // so when the warm budget runs out the rest is skipped and counted
-    // in the artifact (warm_n / warm_skipped_n).
+    // small thread pool. Spark sessions are thread-safe for independent
+    // actions, each query runs exactly once, and sink temp dirs are
+    // keyed per (query-prefix, input-dir). The one state the tasks share
+    // is the session conf: the adjacent stream_* queries replay up to
+    // warmThreads at a time, and StreamOps.replay sets its stream conf
+    // only under a JVM-wide lock while its queries start, restoring it
+    // before the lock is released. Batch barriers keep sweep() out of
+    // running queries' lineage — a sweep mid-flight could unpersist a
+    // checkpoint block a running warm query still needs. The pass is
+    // also BUDGET-aware: an unwarmed query is not a correctness risk,
+    // only a first-pass wall inflation the retime discipline (floor
+    // 1.0 s) already corrects, so when the warm budget runs out the rest
+    // is skipped and counted in the artifact (warm_n / warm_skipped_n).
     val warmupT0 = System.nanoTime()
     val warmAll = sys.env.getOrElse("SPARK_GRAFT_WARM_ALL", "1") != "0"
     val warmThreads =
@@ -404,13 +407,8 @@ object Bench {
     // query records -1, NOT its elapsed time: a crash must never read as
     // a fast success in the bench JSON.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    // diagnostic knob: reverse the timed-pass order to separate
-    // query-identity cost from session-age cost (a query that is slow in
-    // BOTH orders is slow; one that is slow only late is aging)
-    val reverseOrder = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "") == "reverse"
-    val declared0 = SparkEntry.queries.toSeq.sortBy(_._1)
+    val declared = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val declared = if (reverseOrder) declared0.reverse else declared0
     // initial snapshot BEFORE the first timed query: a kill during query
     // one must not leave a stale artifact from a previous run on disk
     rec.writeSnapshot(outPath)

@@ -3,8 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Writes EXPLAINS.md: formatted physical plans of the flagship queries,
-  * regenerated on demand (`sbt "runMain graft.ExplainDump"`). */
+/** Writes EXPLAINS.md in the working directory: formatted physical plans
+  * of the flagship queries, generated on demand
+  * (`sbt "runMain graft.ExplainDump"`) and not committed — nothing reads
+  * it, and a committed copy goes stale with every plan change. */
 object ExplainDump {
   val flagships = Seq(
     "rel_filter_pushdown", "rel_join_multi", "rel_topk", "rel_q1_pricing",
@@ -124,7 +126,7 @@ object ExplainDump {
       sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/EXPLAINS.md"), sb.toString)
+    Files.writeString(Paths.get("EXPLAINS.md"), sb.toString)
     println(s"wrote EXPLAINS.md (${flagships.size} plans)")
     spark.stop()
   }

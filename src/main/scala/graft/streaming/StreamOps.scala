@@ -1,9 +1,18 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+
+import graft.queries.Tables
 
 /** Structured Streaming twins of the batch time-series operators
   * (SURVEY.md §2.3 marks streaming absent in the reference; resample O6
@@ -17,88 +26,138 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Bench/harness streaming conf, applied around each bounded run and
-    * restored afterwards (a key that was unset is unset again):
-    *  - state partitions sized to the key space (see resampleOnceMem);
-    *  - no-data micro-batches OFF — every harness here sequences
-    *    watermark advancement with explicit data batches (the two-sentinel
-    *    pattern in [[sessionizeOnceEventTime]]), so the extra
-    *    watermark-advance batches are pure per-batch state-store overhead;
-    *  - checkpoint files written through Spark's
-    *    `FileSystemBasedCheckpointFileManager`. The default manager for a
-    *    `file:` path goes through Hadoop's `FileContext`, and on a host
-    *    without native Hadoop IO every rename forks a `readlink` process
-    *    (`RawLocalFileSystem.getFileLinkStatus`) and every create and
-    *    mkdir forks a `chmod`: about 1,100 processes per `stream_replay`
-    *    pass, most of `streaming.state_commit_ms` (SCALING.md, "Per-batch
-    *    fixed cost of a bounded replay"). `FileSystem.rename` resolves no
-    *    links. That manager's no-overwrite rename is check-then-rename,
-    *    not atomic against a second writer to the same directory; it is
-    *    safe here only because [[withHarnessConf]] always writes to a
-    *    fresh private temp dir. It must not become a session default:
-    *    user-chosen checkpoint locations keep Spark's default manager. */
-  private def withStreamConf[T](spark: SparkSession, parts: String)(body: => T): T = {
-    val conf = spark.conf
-    val oldParts = conf.get("spark.sql.shuffle.partitions")
-    val oldNoData = conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val oldManager = conf.getOption(CheckpointManagerKey)
-    conf.set("spark.sql.shuffle.partitions", parts)
-    conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    conf.set(CheckpointManagerKey,
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    try body
-    finally {
-      conf.set("spark.sql.shuffle.partitions", oldParts)
-      conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
-      oldManager.fold(conf.unset(CheckpointManagerKey))(conf.set(CheckpointManagerKey, _))
+  /** Held while a replay's conf is set on the caller's session. */
+  private val startLock = new Object
+
+  /** The bounded-replay protocol every stream twin runs through: start
+    * `queries`, drive them through `waves`, stop them.
+    *
+    *  1. Start, under one JVM-wide lock. Save the affected keys of the
+    *     caller's session and set the harness values:
+    *     - `spark.sql.shuffle.partitions` = `parts`. A stateful operator
+    *       pins one state-store instance, with checkpoint I/O every batch,
+    *       per shuffle partition, so state partitions are sized to the
+    *       operator's key space, not the CPU count: "4" where the keys are
+    *       few (days, windows, tokens), "8" for the per-user state
+    *       machines. (Production sizing: state partitions ∝ distinct keys
+    *       × throughput.)
+    *     - no-data microbatches off: every replay sequences watermark
+    *       advancement with explicit data waves (the two-sentinel pattern
+    *       in [[sessionizeSharedRun]]), so watermark-only batches are pure
+    *       per-batch state-store overhead.
+    *     - checkpoint files written through Spark's
+    *       `FileSystemBasedCheckpointFileManager`. The default manager for
+    *       a `file:` path goes through Hadoop's `FileContext`, and on a
+    *       host without native Hadoop IO every rename forks a `readlink`
+    *       (`RawLocalFileSystem.getFileLinkStatus`) and every create and
+    *       mkdir a `chmod`: about 1,100 processes per `stream_replay` pass
+    *       (SCALING.md, "Per-batch fixed cost of a bounded replay").
+    *       `FileSystem.rename` resolves no links. That manager's
+    *       no-overwrite rename is check-then-rename, not atomic against a
+    *       second writer to the same directory; it is safe here only
+    *       because each query checkpoints to its own subdirectory of a
+    *       fresh private temp dir. User-chosen checkpoint locations keep
+    *       Spark's default manager.
+    *     - the RocksDB state-store provider iff the query's logical plan
+    *       holds a `TransformWithState` node (that API requires it);
+    *       otherwise the provider is the caller's.
+    *     A query snapshots its conf at start: inside `start()`, on the
+    *     caller's thread, the query clones the session, and the clone
+    *     plans every batch and writes every checkpoint. Every key is then
+    *     restored, so nothing outlives the start, and concurrent replays
+    *     on one session cannot leave each other's values behind.
+    *  1. Drive: run each wave (e.g. `() => ms.addData(chunk)`), then
+    *     `processAllAvailable()` on every query; with no waves, drain once.
+    *  1. Stop every started query and delete the checkpoint dir, in
+    *     `finally`: a bounded replay has no durability to preserve.
+    *
+    * Each query comes with the function that configures its writer
+    * (format, name, output mode); [[memory]] gives the memory-table one. */
+  private[graft] def replay(spark: SparkSession, parts: String,
+      waves: Seq[() => Any] = Nil)(
+      queries: (DataFrame, DataStreamWriter[Row] => DataStreamWriter[Row])*): Unit = {
+    val ckpt = ckptDir()
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try {
+      startLock.synchronized {
+        val conf = spark.conf
+        val providerKey = "spark.sql.streaming.stateStore.providerClass"
+        val harness = Seq("spark.sql.shuffle.partitions" -> parts,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+          "spark.sql.streaming.checkpointFileManagerClass" ->
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+        val saved = (harness.map(_._1) :+ providerKey).map(k => k -> conf.getOption(k)).toMap
+        def restore(k: String): Unit = saved(k).fold(conf.unset(k))(conf.set(k, _))
+        try {
+          harness.foreach { case (k, v) => conf.set(k, v) }
+          queries.zipWithIndex.foreach { case ((df, sink), i) =>
+            if (df.queryExecution.logical.exists(_.isInstanceOf[TransformWithState]))
+              conf.set(providerKey,
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+            else restore(providerKey)
+            started += sink(df.writeStream)
+              .option("checkpointLocation", ckpt.resolve(i.toString).toString)
+              .start()
+          }
+        } finally saved.keys.foreach(restore)
+      }
+      (if (waves.isEmpty) Seq(() => ()) else waves).foreach { wave =>
+        wave()
+        started.foreach(_.processAllAvailable())
+      }
+    } finally {
+      started.foreach(_.stop())
+      val walk = Files.walk(ckpt)
+      try walk.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
+      finally walk.close()
     }
   }
 
-  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  /** A replay sink: the memory table `name`, written in `mode`. */
+  private def memory(name: String, mode: OutputMode)
+      : DataStreamWriter[Row] => DataStreamWriter[Row] =
+    _.format("memory").queryName(name).outputMode(mode)
+
+  /** Replays of `recs` in several microbatches use this many. */
+  private val Batches = 3
+
+  /** `recs` as [[Batches]] waves of consecutive chunks added to `ms`, so
+    * each chunk is its OWN microbatch: adding every chunk before the start
+    * would drain them in one batch, and the cross-batch state carry the
+    * twins document would never be exercised (r12 ADVICE). */
+  private def chunkWaves[A](ms: MemoryStream[A], recs: Array[A]): Seq[() => Any] =
+    recs.grouped(math.max(1, (recs.length + Batches - 1) / Batches)).toSeq
+      .map(chunk => () => ms.addData(chunk.toIndexedSeq))
 
   /** Fresh checkpoint dir, on tmpfs when the host has one. */
-  private def ckptDir(): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (java.nio.file.Files.isWritable(shm)) shm
-               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, "graft_ckpt")
+  private def ckptDir(): Path = {
+    val shm = Paths.get("/dev/shm")
+    val base = if (Files.isWritable(shm)) shm
+               else Paths.get(System.getProperty("java.io.tmpdir"))
+    Files.createTempDirectory(base, "graft_ckpt")
   }
 
   private val linkDirs =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
-  /** FileStreamSource wants a directory, and does not descend into
-    * subdirectories. A table that is already a directory of part files
-    * streams as it is; a single read-only parquet file is exposed through
-    * a temp-dir symlink. The symlink dir is CACHED per (input dir,
-    * table) — repeated bench/correctness invocations reuse one symlink
-    * dir instead of leaking a fresh /tmp entry per call — and removed
-    * by a shutdown hook at JVM exit. */
-  private def linkedDir(dir: String, table: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
-    if (java.nio.file.Files.isDirectory(src)) src.toString
-    else linkDirs.getOrElseUpdate((dir, table), {
-      val tmp = java.nio.file.Files.createTempDirectory(s"stream_$table")
-      java.nio.file.Files.createSymbolicLink(tmp.resolve(s"$table.parquet"), src)
-      graft.queries.Tables.deleteOnExit(tmp)
-      tmp.toString
-    })
-  }
-
-  /** Run `body` with the bounded-replay conf ([[withStreamConf]]) and a
-    * fresh tmpfs checkpoint dir, deleting the checkpoint afterwards —
-    * a bounded harness run has no durability to preserve. */
-  private def withHarnessConf[T](spark: SparkSession, parts: String)(body: String => T): T = {
-    val ckpt = ckptDir()
-    try withStreamConf(spark, parts)(body(ckpt.toString))
-    finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try {
-        val files = walk.iterator().asScala.toSeq
-        files.reverseIterator.foreach(java.nio.file.Files.deleteIfExists(_))
-      } finally walk.close()
-    }
+  /** `dir`'s `table` as a parquet file-source stream. FileStreamSource
+    * wants a directory, and does not descend into subdirectories. A table
+    * that is already a directory of part files streams as it is; a single
+    * read-only parquet file is exposed through a temp-dir symlink. The
+    * symlink dir is CACHED per (input dir, table) — repeated
+    * bench/correctness invocations reuse one symlink dir instead of
+    * leaking a fresh /tmp entry per call — and removed by a shutdown hook
+    * at JVM exit. */
+  private def fileStream(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val src = Paths.get(s"$dir/$table.parquet")
+    val path = if (Files.isDirectory(src)) src.toString
+      else linkDirs.getOrElseUpdate((dir, table), {
+        val tmp = Files.createTempDirectory(s"stream_$table")
+        Files.createSymbolicLink(tmp.resolve(s"$table.parquet"), src)
+        Tables.deleteOnExit(tmp)
+        tmp.toString
+      })
+    spark.readStream.schema(Tables.schema(spark, src.toString)).parquet(path)
   }
 
   /** Streaming resample: tumbling `rule` buckets of `value` sums/counts.
@@ -106,28 +165,18 @@ object StreamOps {
     * harness pattern) and returns the final result table. */
   def resampleOnce(spark: SparkSession, dir: String, rule: String,
       sinkName: String = "stream_resample_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "events")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/events.parquet")
     // normalizeTs handles whichever physical ts encoding this round's
     // generator shipped (raw nanos long / TIMESTAMP_NTZ / timestamp) —
     // a pure projection, so it composes with the streaming source.
     val src = graft.queries.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(tmp))
+      fileStream(spark, dir, "events"))
     val agg = src
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), rule))
       .agg(sum(col("value").cast(DecimalType(20, 6))).cast("double").as("day_sum"),
         count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("day_sum"), col("n"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -155,20 +204,7 @@ object StreamOps {
       .agg(sum(col("value").cast(DecimalType(20, 6))).cast("double").as("day_sum"),
         count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("day_sum"), col("n"))
-    // Stateful ops pin one state-store instance (with per-batch checkpoint
-    // I/O) per shuffle partition at query start. The window-key space here
-    // is tiny (days), so 32 state partitions are pure overhead — size the
-    // state partitioning to the key cardinality, not the CPU count.
-    // (Production sizing: state partitions ∝ distinct keys × throughput.)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -178,19 +214,8 @@ object StreamOps {
     * completion and returns the deduped table. */
   def dedupOnce(spark: SparkSession, dir: String, keyCols: Seq[String],
       sinkName: String = "stream_dedup_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
-    // see resampleOnceMem: size state partitions to the workload, not CPUs
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = src.dropDuplicates(keyCols)
-        .writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    val src = fileStream(spark, dir, "documents")
+    replay(spark, "4")(src.dropDuplicates(keyCols) -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -220,8 +245,6 @@ object StreamOps {
           array_distinct(shingle_hashes(word_hashes(col("text")))).as("ds"))
         .withColumn("nd", size(col("ds")).cast("long"))
         .withColumn("bands", bands(minhash_sig(col("ds"))))
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     // cached (tracked, see graft.core.Caches): the static side of a
     // stream-static join is re-planned EVERY microbatch — the cache both
     // avoids re-shingling the history per batch and keeps measured stats
@@ -233,7 +256,7 @@ object StreamOps {
       col("ds").as("dsh"), col("nd").as("nh"),
       posexplode(col("bands")).as(Seq("bi", "bv")))
     val src = shingled(
-      spark.readStream.schema(schema).parquet(tmp)
+      fileStream(spark, dir, "documents")
         .filter(col("doc_id") % histMod === 0))
       .select(col("id"), col("ds"), col("nd"),
         posexplode(col("bands")).as(Seq("bi", "bv")))
@@ -244,14 +267,7 @@ object StreamOps {
       .filter(col("j") >= tau)
       .select(col("id"), col("match_id"), col("j"))
       .dropDuplicates("id", "match_id")
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = verified.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(verified -> memory(sinkName, OutputMode.Append()))
     hist.unpersist()
     spark.table(sinkName)
   }
@@ -279,15 +295,7 @@ object StreamOps {
         min(col("value")).as("low"), max_by(col("value"), ord).as("close"))
       .select(unix_micros(col("w.start")).as("bucket_us"),
         col("open"), col("high"), col("low"), col("close"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -307,23 +315,14 @@ object StreamOps {
     // the streaming twin can never drift from the deconSql oracle
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val ev = grams(graft.queries.Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod === 0))
       .select(col("g")).distinct()
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
       .filter(col("doc_id") % evalMod =!= 0)
     val agg = grams(src).join(broadcast(ev), "g")
       .groupBy("id").agg(count(lit(1)).as("n_hits"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -344,26 +343,17 @@ object StreamOps {
       sinkName: String = "stream_contam_rate_sink"): DataFrame = {
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
     val tr = grams(graft.queries.Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod =!= 0))
       .select(col("g")).distinct().withColumn("hit", lit(1L))
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
       .filter(col("doc_id") % evalMod === 0)
     val agg = grams(src).join(tr, Seq("g"), "left")
       .groupBy("id").agg(
         count(lit(1)).as("n_grams"),
         count(col("hit")).as("n_hit"))
       .withColumn("rate", col("n_hit") / col("n_grams"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -377,18 +367,9 @@ object StreamOps {
     * SQL verbatim. */
   def cdcChunksOnce(spark: SparkSession, dir: String, n: Int, modK: Int,
       sinkName: String = "stream_cdc_chunks_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val out = graft.operators.Chunking.cdcChunks(src, "doc_id", "text", n, modK)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -401,18 +382,9 @@ object StreamOps {
   def piiStatsOnce(spark: SparkSession, dir: String,
       patterns: Seq[(String, String)],
       sinkName: String = "stream_pii_stats_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val agg = graft.operators.TextAnalysis.piiStats(src, "source", "text", patterns)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName)
   }
 
@@ -425,21 +397,12 @@ object StreamOps {
   def cleanLinesOnce(spark: SparkSession, dir: String, wordsPerLine: Int,
       minWords: Int, minLines: Int, badWords: Seq[String],
       sinkName: String = "stream_clean_lines_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val out = graft.operators.TextAnalysis.cleanLines(
       graft.operators.TextAnalysis.segmentLines(src, "doc_id", "text", wordsPerLine),
       "id", "text", minWordsPerLine = minWords, minLines = minLines,
       badWords = badWords)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -452,18 +415,9 @@ object StreamOps {
     * `text_winnowing` oracle verbatim. */
   def winnowOnce(spark: SparkSession, dir: String, w: Int,
       sinkName: String = "stream_winnow_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val out = graft.operators.TextAnalysis.winnow(src, "doc_id", "text", w)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -477,19 +431,10 @@ object StreamOps {
   def importanceScoreOnce(spark: SparkSession, dir: String,
       table: Seq[Long], buckets: Int,
       sinkName: String = "stream_dsir_score_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val out = graft.operators.Mixture.importanceScore(
       src, "doc_id", "text", table, buckets)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -559,9 +504,7 @@ object StreamOps {
     require((0 until subspaces).forall(byM.contains),
       "codebook is missing a subspace's codewords (empty embeddings " +
       "input?) — the plan-literal encoder needs >= 1 codeword per m")
-    val batchSchema = graft.queries.Tables.schema(spark, s"$dir/embeddings.parquet")
-    val tmp = linkedDir(dir, "embeddings")
-    val src = spark.readStream.schema(batchSchema).parquet(tmp)
+    val src = fileStream(spark, dir, "embeddings")
     val fx = graft.operators.Similarity.fixedPoint(src, "vec_id", "embedding")
     val codeStructs = (0 until subspaces).map { m =>
       val cands = byM(m).sortBy(_.getLong(1)).map { row =>
@@ -579,14 +522,7 @@ object StreamOps {
     val out = fx.select(col("id"),
         explode(array(codeStructs.toIndexedSeq: _*)).as("p"))
       .select(col("id"), col("p.m").as("m"), col("p.cid").as("cid"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -622,8 +558,7 @@ object StreamOps {
     require(cents.nonEmpty,
       "trained centroid book is empty (empty embeddings input?) — " +
       "an array() of zero candidate structs would fail at plan time")
-    val tmp = linkedDir(dir, "embeddings")
-    val src = spark.readStream.schema(batch.schema).parquet(tmp)
+    val src = fileStream(spark, dir, "embeddings")
     val fx = graft.operators.Similarity.fixedPoint(src, "vec_id", "embedding")
     val cands = cents.sortBy(_.getLong(1)).map { row =>
       val cid = row.getLong(1)
@@ -638,14 +573,7 @@ object StreamOps {
       .withColumn("__best", array_min(array(cands.toIndexedSeq: _*)))
       .select(col("id"), col("__best.cid").as("cid"),
         col("__best.d2").as("d2"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -663,38 +591,14 @@ object StreamOps {
     val batch = graft.queries.Tables.t(spark, dir, "documents")
     val vocab = graft.operators.TextAnalysis.vocab(batch, "text", k)
       .collect().map(_.getString(0)) // k strings — the bounded artifact
-    val tmp = linkedDir(dir, "documents")
-    val src = spark.readStream.schema(batch.schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val ws = split(col("text"), " ")
     val vlit = array(vocab.toIndexedSeq.map(lit): _*)
     val out = src.select(col("doc_id").as("id"),
       size(ws).cast("long").as("n_tokens"),
       size(filter(ws, w => !array_contains(vlit, w))).cast("long").as("n_oov"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
-  }
-
-  /** Run `body` with the RocksDB state-store provider (required by the
-    * transformWithState API, and the production provider for state
-    * larger than executor heap), restoring the previous provider conf
-    * afterwards — shared by every transformWithState harness. */
-  private def withRocksDbProvider[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
   }
 
   /** The funnel advance rule, shared by BOTH streaming twins (they
@@ -749,14 +653,7 @@ object StreamOps {
       }
       .toDF("user_id", "t1_us", "t2_us", "t3_us")
       .filter(col("t1_us") >= 0)
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
   }
 
@@ -841,16 +738,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("cohort_week", "week_offset", "user_id")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName).distinct()
       .groupBy(col("cohort_week"), col("week_offset"))
       .agg(count(lit(1)).as("n_active"))
@@ -878,16 +766,7 @@ object StreamOps {
         OutputMode.Update())
       .toDF("user_id", "t1_us", "t2_us", "t3_us")
       .filter(col("t1_us") >= 0)
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
   }
 
@@ -964,7 +843,7 @@ object StreamOps {
     * steps online; the sink aggregate (counts + per-from totals + one
     * division) matches the batch tail, so the bounded (ts, id)-ordered
     * replay shares rel_transitions' oracle verbatim. */
-  def transitionsOnce(spark: SparkSession, dir: String, batches: Int = 3,
+  def transitionsOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_transitions_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -975,30 +854,13 @@ object StreamOps {
       .as[(Long, Long, Long, String)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, String)]
-    val per = math.max(1, (recs.length + batches - 1) / batches)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new TransitionsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("from_type", "to_type")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .start()
-        // interleave addData with processAllAvailable so each chunk is
-        // its OWN microbatch — pre-start addData would drain every chunk
-        // in one batch and the documented cross-batch ValueState carry
-        // would never actually be exercised (r12 ADVICE)
-        recs.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append()))
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
     spark.table(sinkName)
@@ -1022,33 +884,14 @@ object StreamOps {
     val feed0 = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
-      (max(col("ts_us")) + 1L).as("__t1"))
-    val feed = feed0.crossJoin(broadcast(bounds))
-      .withColumn("__wave", expr("(ts_us - __t0) * 3 div (__t1 - __t0)"))
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("event_type"), col("__wave"))
-    val tmp = stageWaveFiles(feed, "__wave", 0L to 2L, "stream_trans_src")
-    val schema = feed0.schema
-    val out = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val out = rangeWaves(feed0, "ts_us", "stream_trans_src")
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .transformWithState(new TransitionsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("from_type", "to_type")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
     spark.table(sinkName)
@@ -1125,7 +968,7 @@ object StreamOps {
     target.unionAll(upd).unionAll(redel).unionAll(ins).unionAll(ghost)
   }
 
-  def mergeOnceTws(spark: SparkSession, dir: String, batches: Int = 3,
+  def mergeOnceTws(spark: SparkSession, dir: String,
       sinkName: String = "stream_merge_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1140,20 +983,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("k", "seq", "v", "alive")
-    val per = math.max(1, (recs.length + batches - 1) / batches)
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        recs.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
@@ -1213,6 +1043,34 @@ object StreamOps {
     tmp
   }
 
+  /** `feed` streamed back from [[stageWaveFiles]], one wave file per
+    * microbatch in wave order (`maxFilesPerTrigger=1`), read with
+    * `schema`. */
+  private def waveStream(feed: DataFrame, waveCol: String, waves: Seq[Long],
+      prefix: String, schema: StructType): DataFrame =
+    feed.sparkSession.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(stageWaveFiles(feed, waveCol, waves, prefix).toString)
+
+  /** [[waveStream]] of `feed` in three ranges of `by`: wave =
+    * (by − min)·3 div (max + 1 − min), from one min/max aggregate
+    * broadcast back as the row (`__t0`, `__t1`), so no row visits the
+    * driver. `extra(bounds)` adds waves 3, 4, … built from that same row.
+    * The stream reads `cols` of `feed` (all of them by default); the
+    * staged files carry `__wave` too, and the declared read schema prunes
+    * it at the parquet scan. */
+  private def rangeWaves(feed: DataFrame, by: String, prefix: String,
+      cols: Seq[String] = Nil,
+      extra: DataFrame => Seq[DataFrame] = _ => Nil): DataFrame = {
+    val keep = (if (cols.isEmpty) feed.columns.toSeq else cols).map(col)
+    val bounds = feed.agg(min(col(by)).as("__t0"), (max(col(by)) + 1L).as("__t1"))
+    val more = extra(bounds)
+    val waves = more.foldLeft(feed.crossJoin(broadcast(bounds))
+        .withColumn("__wave", expr(s"($by - __t0) * 3 div (__t1 - __t0)"))
+        .select(keep :+ col("__wave"): _*))(_ unionByName _)
+    waveStream(waves, "__wave", 0L until 3L + more.size, prefix,
+      feed.select(keep: _*).schema)
+  }
+
   /** FILE-SOURCE twin of [[mergeOnceTws]]: the MemoryStream harness
     * replays a driver collect (documented test-harness pattern); this
     * variant proves the production no-collect ingest path END TO END —
@@ -1226,27 +1084,14 @@ object StreamOps {
       sinkName: String = "stream_merge_file_sink"): DataFrame = {
     import spark.implicits._
     val feed = mergeFeed(spark, dir)
-    val schema = feed.schema
-    val tmp = stageWaveFiles(feed, "seq", 0L to 2L, "stream_merge_src")
-    val out = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val out = waveStream(feed, "seq", 0L to 2L, "stream_merge_src", feed.schema)
       .as[(Long, Long, String, Long)]
       .groupByKey(_._1)
       .transformWithState(new MergeProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("k", "seq", "v", "alive")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
@@ -1269,25 +1114,14 @@ object StreamOps {
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Long)]
     val (b1, b2) = recs.splitAt(recs.length / 2)
-    ms.addData(b1.toIndexedSeq)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new DomainCapProcessor(cap),
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("doc_id", "domain", "key_rank")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        ms.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8", Seq(b1, b2).map(b => () => ms.addData(b.toIndexedSeq)))(
+      out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
   }
 
@@ -1341,7 +1175,7 @@ object StreamOps {
   }
 
   /** Streaming attribution — see [[AttributionProcessor]]. */
-  def attributionOnce(spark: SparkSession, dir: String, batches: Int = 3,
+  def attributionOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_attr_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1354,7 +1188,6 @@ object StreamOps {
       .as[(Long, Long, Long, String, Long)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, String, Long)]
-    val per = math.max(1, (recs.length + batches - 1) / batches)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new AttributionProcessor,
@@ -1362,20 +1195,7 @@ object StreamOps {
         OutputMode.Append())
       .toDF("user_id", "touch_id", "conv_id", "n_touches",
         "linear_micro", "last_touch_micro")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .start()
-        // per-chunk microbatches — see transitionsOnce (r12 ADVICE)
-        recs.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -1398,18 +1218,7 @@ object StreamOps {
         col("event_id"), col("event_type"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
           * lit(1000000L)).cast("long").as("vm"))
-    val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
-      (max(col("ts_us")) + 1L).as("__t1"))
-    val feed = feed0.crossJoin(broadcast(bounds))
-      .withColumn("__wave", expr("(ts_us - __t0) * 3 div (__t1 - __t0)"))
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("event_type"), col("vm"), col("__wave"))
-    val tmp = stageWaveFiles(feed, "__wave", 0L to 2L, "stream_attr_src")
-    // declared 5-column read schema prunes __wave at the parquet scan
-    val schema = feed0.schema
-    val out = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val out = rangeWaves(feed0, "ts_us", "stream_attr_src")
       .as[(Long, Long, Long, String, Long)]
       .groupByKey(_._1)
       .transformWithState(new AttributionProcessor,
@@ -1417,16 +1226,7 @@ object StreamOps {
         OutputMode.Append())
       .toDF("user_id", "touch_id", "conv_id", "n_touches",
         "linear_micro", "last_touch_micro")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -1478,7 +1278,7 @@ object StreamOps {
     * row per emitted version state; the final SELECT keeps each
     * (key, from)'s max(to) (a closed version supersedes its own open
     * emission) and derives is_current. */
-  def scd2Once(spark: SparkSession, dir: String, batches: Int = 3,
+  def scd2Once(spark: SparkSession, dir: String,
       sinkName: String = "stream_scd2_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1489,27 +1289,13 @@ object StreamOps {
       .as[(Long, Long, Long, String)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, String)]
-    val per = math.max(1, (recs.length + batches - 1) / batches)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new Scd2Processor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("user_id", "attr", "from_us", "to_raw")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        // per-chunk microbatches — see transitionsOnce (r12 ADVICE)
-        recs.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
       .groupBy("user_id", "attr", "from_us")
       .agg(max(col("to_raw")).as("__to"))
@@ -1536,36 +1322,14 @@ object StreamOps {
     val feed0 = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
-      (max(col("ts_us")) + 1L).as("__t1"))
-    val feed = feed0.crossJoin(broadcast(bounds))
-      .withColumn("__wave",
-        expr("(ts_us - __t0) * 3 div (__t1 - __t0)"))
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("event_type"), col("__wave"))
-    // the staged files carry __wave too; the declared 4-column read
-    // schema prunes it at the parquet scan
-    val tmp = stageWaveFiles(feed, "__wave", 0L to 2L, "stream_scd2_src")
-    val schema = feed0.schema
-    val out = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val out = rangeWaves(feed0, "ts_us", "stream_scd2_src")
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .transformWithState(new Scd2Processor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("user_id", "attr", "from_us", "to_raw")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
       .groupBy("user_id", "attr", "from_us")
       .agg(max(col("to_raw")).as("__to"))
@@ -1667,7 +1431,7 @@ object StreamOps {
     * see [[HoltProcessor]]. Bounded multi-batch replay; emits one
     * (event_id, level_micro, forecast_micro) row per event past the
     * two-value initialization. */
-  def holtOnce(spark: SparkSession, dir: String, batches: Int = 3,
+  def holtOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_holt_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1680,27 +1444,13 @@ object StreamOps {
       .as[(Long, Long, Long, Long)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, Long)]
-    val per = math.max(1, (recs.length + batches - 1) / batches)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new HoltProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("event_id", "level_micro", "forecast_micro")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        // per-chunk microbatches — see transitionsOnce (r12 ADVICE)
-        recs.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
     spark.table(sinkName)
   }
 
@@ -1712,10 +1462,9 @@ object StreamOps {
     * to the batch [[graft.operators.TextAnalysis.heavyHitters]], so the
     * twin shares the `text_heavy_hitters` oracle verbatim. */
   def heavyHittersOnce(spark: SparkSession, dir: String, counters: Int,
-      share: Int, shards: Int, batches: Int = 3,
+      share: Int, shards: Int,
       sinkName: String = "stream_hh_sink"): DataFrame = {
     require(counters >= share, "counters >= share (superset guarantee)")
-    require(batches >= 1, "need at least one replay batch")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.queries.Tables.t(spark, dir, "documents")
@@ -1726,30 +1475,16 @@ object StreamOps {
       .as[(Long, String)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    // replay in several batches so the MG ValueState genuinely carries
-    // and merges across micro-batches (each batch emits its shard's
-    // current candidates; the union across batches stays a superset)
-    val per = math.max(1, (toks.length + batches - 1) / batches)
     val out = ms.toDS()
       .groupByKey(_._1)
       .transformWithState(new MgProcessor(counters),
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("token")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        // per-chunk microbatches — see transitionsOnce (r12 ADVICE)
-        toks.grouped(per).foreach { chunk =>
-          ms.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        q.stop()
-      }
-    }
+    // replay in several batches so the MG ValueState genuinely carries
+    // and merges across micro-batches (each batch emits its shard's
+    // current candidates; the union across batches stays a superset)
+    replay(spark, "8", chunkWaves(ms, toks))(out -> memory(sinkName, OutputMode.Update()))
     val cands = spark.table(sinkName).select("token").distinct()
     val n = docs.select(explode(split(col("text"), " ")).as("token"))
       .agg(count(lit(1)).as("n"))
@@ -1781,33 +1516,14 @@ object StreamOps {
       .select(col("doc_id"),
         pmod(hash(col("token")), lit(shards)).cast("long").as("shard"),
         col("token"))
-    val bounds = toks0.agg(min(col("doc_id")).as("__d0"),
-      (max(col("doc_id")) + 1L).as("__d1"))
-    val feed = toks0.crossJoin(broadcast(bounds))
-      .withColumn("__wave", expr("(doc_id - __d0) * 3 div (__d1 - __d0)"))
-      .select(col("shard"), col("token"), col("__wave"))
-    val tmp = stageWaveFiles(feed, "__wave", 0L to 2L, "stream_hh_src")
-    // declared 2-column read schema prunes __wave at the parquet scan
-    val schema = feed.drop("__wave").schema
-    val out = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val out = rangeWaves(toks0, "doc_id", "stream_hh_src", Seq("shard", "token"))
       .as[(Long, String)]
       .groupByKey(_._1)
       .transformWithState(new MgProcessor(counters),
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("token")
-    withRocksDbProvider(spark) {
-      withHarnessConf(spark, "8") { ckpt =>
-        val q = out.writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Update())
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
     val cands = spark.table(sinkName).select("token").distinct()
     val n = docs.select(explode(split(col("text"), " ")).as("token"))
       .agg(count(lit(1)).as("n"))
@@ -1827,9 +1543,7 @@ object StreamOps {
   def phraseHitsOnce(spark: SparkSession, dir: String, phrases: Seq[String],
       sinkName: String = "stream_phrase_sink"): DataFrame = {
     require(phrases.nonEmpty, "need at least one phrase")
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val ws = split(col("text"), " ")
     val hits = array(phrases.map { ph =>
       val pw = ph.split(" ")
@@ -1845,14 +1559,7 @@ object StreamOps {
     val out = src.select(col("doc_id").as("id"), explode(hits).as("ph"))
       .select(col("ph.phrase").as("phrase"), col("id"), col("ph.n_matches").as("n_matches"))
       .filter(col("n_matches") > 0)
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -1865,23 +1572,14 @@ object StreamOps {
     * of (id, w), so the twin shares the batch oracle verbatim. */
   def weightedSampleOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_weighted_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val ws = split(col("text"), " ")
     val w = size(array_distinct(ws)).cast("long").cast("double") /
       size(ws).cast("long").cast("double")
     val out = graft.operators.Sampling.weighted(
       src.select(col("doc_id"), col("source"), w.as("keep_w")),
       "doc_id", col("keep_w"))
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -1894,20 +1592,10 @@ object StreamOps {
     * monitoring dashboard reads from the sink, top-k taken there. */
   def vocabOnce(spark: SparkSession, dir: String, k: Int,
       sinkName: String = "stream_vocab_sink"): DataFrame = {
-    val tmp = linkedDir(dir, "documents")
-    val schema = graft.queries.Tables.schema(spark, s"$dir/documents.parquet")
-    val src = spark.readStream.schema(schema).parquet(tmp)
+    val src = fileStream(spark, dir, "documents")
     val agg = src.select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
-    // see resampleOnceMem: size state partitions to the workload, not CPUs
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
     spark.table(sinkName).orderBy(col("n").desc, col("token")).limit(k)
   }
 
@@ -1930,16 +1618,7 @@ object StreamOps {
     ms.addData(recs.toIndexedSeq)
     val src = ms.toDF().toDF("user_id", "ts_us", "value", "event_id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    // see resampleOnceMem: size state partitions to the workload, not CPUs
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = sessionizeStream(src, gapMinutes)
-        .writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8")(sessionizeStream(src, gapMinutes) -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -1999,7 +1678,6 @@ object StreamOps {
       val maxUs = recs.iterator.map(_._2).max
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Long, Double, Long)]
-      ms.addData(recs.toIndexedSeq :+ ((-1L, maxUs + 365L * 86400L * 1000000L, 0.0, 0L)))
       val src = ms.toDF().toDF("user_id", "ts_us", "value", "event_id")
         .withColumn("ts", timestamp_micros(col("ts_us")))
       val native = src
@@ -2016,23 +1694,11 @@ object StreamOps {
       val tag = math.abs((dir, gapMinutes).hashCode())
       val etSink = s"stream_sess_et_$tag"
       val natSink = s"stream_sess_native_$tag"
-      // see resampleOnceMem: size state partitions to the workload, not CPUs
-      withHarnessConf(spark, "8") { ckpt =>
-        val qEt = sessionizeStreamEventTime(src, gapMinutes)
-          .writeStream.format("memory").queryName(etSink)
-          .option("checkpointLocation", s"$ckpt/et")
-          .outputMode(OutputMode.Append())
-          .start()
-        val qNat = native
-          .writeStream.format("memory").queryName(natSink)
-          .option("checkpointLocation", s"$ckpt/native")
-          .outputMode(OutputMode.Append())
-          .start()
-        qEt.processAllAvailable(); qNat.processAllAvailable()
-        ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, 0.0, 1L)))
-        qEt.processAllAvailable(); qNat.processAllAvailable()
-        qEt.stop(); qNat.stop()
-      }
+        replay(spark, "8", Seq(
+          () => ms.addData(recs.toIndexedSeq :+ ((-1L, maxUs + 365L * 86400L * 1000000L, 0.0, 0L))),
+          () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, 0.0, 1L)))))(
+        sessionizeStreamEventTime(src, gapMinutes) -> memory(etSink, OutputMode.Append()),
+        native -> memory(natSink, OutputMode.Append()))
       (spark.table(etSink).filter(col("user_id") >= 0),
         spark.table(natSink).filter(col("user_id") >= 0))
     }
@@ -2056,8 +1722,6 @@ object StreamOps {
     val maxUs = recs.iterator.map(_._2).max
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, String, Long)]
-    ms.addData(recs.toIndexedSeq :+
-      ((-1L, maxUs + 365L * 86400L * 1000000L, "view", 0L)))
     val src = ms.toDF().toDF("user_id", "ts_us", "event_type", "event_id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
     val out = src
@@ -2070,16 +1734,11 @@ object StreamOps {
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, "view", 1L)))
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8", Seq(
+        () => ms.addData(recs.toIndexedSeq :+
+          ((-1L, maxUs + 365L * 86400L * 1000000L, "view", 0L))),
+        () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, "view", 1L)))))(
+      out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName).filter(col("user_id") >= 0)
   }
 
@@ -2103,23 +1762,13 @@ object StreamOps {
     val feed0 = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
-    val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
-      (max(col("ts_us")) + 1L).as("__t1"))
-    val data = feed0.crossJoin(broadcast(bounds))
-      .withColumn("__wave", expr("(ts_us - __t0) * 3 div (__t1 - __t0)"))
-      .select(col("user_id"), col("ts_us"), col("event_type"),
-        col("event_id"), col("__wave"))
-    def sentinel(years: Long, wave: Long) = bounds.select(
+    def sentinel(bounds: DataFrame, years: Long, wave: Long) = bounds.select(
       lit(-1L).as("user_id"),
       (col("__t1") - 1L + lit(years * yearUs)).as("ts_us"),
       lit("view").as("event_type"), lit(wave - 3L).as("event_id"),
       lit(wave).as("__wave"))
-    val feed = data.unionByName(sentinel(1L, 3L)).unionByName(sentinel(2L, 4L))
-    val tmp = stageWaveFiles(feed, "__wave", 0L to 4L, "stream_sessdyn_src")
-    val schema = feed0.schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
+    val src = rangeWaves(feed0, "ts_us", "stream_sessdyn_src",
+        extra = b => Seq(sentinel(b, 1L, 3L), sentinel(b, 2L, 4L)))
       .withColumn("ts", timestamp_micros(col("ts_us")))
     val out = src
       .withWatermark("ts", "0 seconds")
@@ -2131,14 +1780,7 @@ object StreamOps {
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName).filter(col("user_id") >= 0)
   }
 
@@ -2194,7 +1836,6 @@ object StreamOps {
         Seq((-1L, ts, leftType, -1L), (-1L, ts, rightType, -2L))
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Long, String, Long)]
-      ms.addData(recs.toIndexedSeq ++ sentinels(maxUs + 365L * 86400L * 1000000L))
       val src = ms.toDF().toDF("user_id", "ts_us", "event_type", "event_id")
       def joined(joinType: String): DataFrame = {
         val left = src.filter(col("event_type") === leftType)
@@ -2216,22 +1857,11 @@ object StreamOps {
       val tag = math.abs((dir, leftType, rightType, windowMinutes).hashCode())
       val innerSink = s"stream_ij_inner_$tag"
       val leftSink = s"stream_ij_left_$tag"
-      withHarnessConf(spark, "8") { ckpt =>
-        val qi = joined("inner").writeStream
-          .format("memory").queryName(innerSink)
-          .option("checkpointLocation", s"$ckpt/inner")
-          .outputMode(OutputMode.Append())
-          .start()
-        val ql = joined("left_outer").writeStream
-          .format("memory").queryName(leftSink)
-          .option("checkpointLocation", s"$ckpt/left")
-          .outputMode(OutputMode.Append())
-          .start()
-        qi.processAllAvailable(); ql.processAllAvailable()
-        ms.addData(sentinels(maxUs + 2L * 365L * 86400L * 1000000L))
-        qi.processAllAvailable(); ql.processAllAvailable()
-        qi.stop(); ql.stop()
-      }
+      replay(spark, "8", Seq(
+          () => ms.addData(recs.toIndexedSeq ++ sentinels(maxUs + 365L * 86400L * 1000000L)),
+          () => ms.addData(sentinels(maxUs + 2L * 365L * 86400L * 1000000L))))(
+        joined("inner") -> memory(innerSink, OutputMode.Append()),
+        joined("left_outer") -> memory(leftSink, OutputMode.Append()))
       (spark.table(innerSink).filter(col("user_id") >= 0),
         spark.table(leftSink).filter(col("user_id") >= 0))
     }
@@ -2260,7 +1890,6 @@ object StreamOps {
     val maxUs = recs.iterator.map(_.ts_us).max
     val sentinelUs = maxUs + 365L * 86400L * 1000000L
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventRec]
-    ms.addData(recs.toIndexedSeq :+ EventRec(sentinelUs, 0.0))
     val agg = ms.toDF()
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 day")
@@ -2273,18 +1902,10 @@ object StreamOps {
     val outPath = java.nio.file.Files.createTempDirectory("stream_pq_sink")
     graft.queries.Tables.deleteOnExit(outPath)
     val outDir = outPath.toString
-    withHarnessConf(spark, "4") { ckpt =>
-      val q = agg.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      ms.addData(Seq(EventRec(sentinelUs + 365L * 86400L * 1000000L, 0.0)))
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "4", Seq(
+        () => ms.addData(recs.toIndexedSeq :+ EventRec(sentinelUs, 0.0)),
+        () => ms.addData(Seq(EventRec(sentinelUs + 365L * 86400L * 1000000L, 0.0)))))(
+      agg -> (_.format("parquet").option("path", outDir).outputMode(OutputMode.Append())))
     spark.read.parquet(outDir).filter(col("bucket_us") < sentinelUs - 365L * 86400L * 1000000L / 2)
   }
 
@@ -2312,15 +1933,7 @@ object StreamOps {
         count(lit(1)).as("user_n"))
     val joined = src.join(broadcast(profile), "user_id")
       .select(col("event_id"), col("user_id"), col("user_total"), col("user_n"))
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = joined.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8")(joined -> memory(sinkName, OutputMode.Append()))
     spark.table(sinkName)
   }
 
@@ -2346,22 +1959,12 @@ object StreamOps {
     val (b1, b2) = recs.splitAt(recs.length / 2)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Double, Long)]
-    ms.addData(b1.toIndexedSeq)
     val agg = ms.toDF().toDF("user_id", "value", "event_id")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(20, 6))).cast("double").as("vsum"))
-    withHarnessConf(spark, "8") { ckpt =>
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update())
-        .start()
-      q.processAllAvailable()
-      ms.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-      q.stop()
-    }
+    replay(spark, "8", Seq(b1, b2).map(b => () => ms.addData(b.toIndexedSeq)))(
+      agg -> memory(sinkName, OutputMode.Update()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n").desc)
     spark.table(sinkName)

@@ -29,7 +29,7 @@ class BehavioralSpec extends SparkSpec {
       // user 4: never views — absent from the funnel entirely
       (8L, ts("2024-01-01 00:00:00"), 4L, "click")
     ).toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = SparkSpec.tempDir("graft_funnel").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.queries.RelationalQueries.queries("rel_funnel")(spark, dir)
       .collect().map(r => r.getLong(0) ->
@@ -51,7 +51,7 @@ class BehavioralSpec extends SparkSpec {
       (7L, ts("2024-01-01 01:00:00"), 3L, "purchase"), // no click stage
       (8L, ts("2024-01-01 00:00:00"), 4L, "click")
     ).toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfunnel").toString
+    val dir = SparkSpec.tempDir("graft_sfunnel").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -72,7 +72,7 @@ class BehavioralSpec extends SparkSpec {
       (3L, ts("2024-01-16 00:00:00"), 1L, "view"), // W+2
       (4L, ts("2024-01-10 00:00:00"), 2L, "view")  // user 2: cohort W+1
     ).toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cohort").toString
+    val dir = SparkSpec.tempDir("graft_cohort").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.queries.RelationalQueries.queries("rel_cohort")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -112,7 +112,7 @@ class BehavioralSpec extends SparkSpec {
       (3L, ts("2024-01-01 00:00:00.000040"), 1L, "view", 9.9),
       (4L, ts("2024-01-01 00:00:00"), 2L, "view", 5.0) // single event
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_twap").toString
+    val dir = SparkSpec.tempDir("graft_twap").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.queries.RelationalQueries.queries("rel_twap")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap

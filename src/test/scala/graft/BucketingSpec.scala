@@ -58,7 +58,7 @@ class BucketingSpec extends SparkSpec {
     // dynamicpruning subquery into the fact scan, so only the matching
     // partitions are read — the other 7/8ths of the corpus never leave
     // the object store
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = SparkSpec.tempDir("graft_dpp").toString
     graft.queries.Tables.t(spark, sf001, "lineitem")
       .withColumn("part_key", pmod(col("l_orderkey"), lit(8)))
       .write.mode("overwrite").partitionBy("part_key").parquet(s"$dir/fact")

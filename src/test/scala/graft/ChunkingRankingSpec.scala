@@ -112,7 +112,7 @@ class ChunkingRankingSpec extends SparkSpec {
     // blind to it). Build a doc long enough to chunk past 64 windows
     // and point the query's table loader at it.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rag_guard").toString
+    val dir = SparkSpec.tempDir("graft_rag_guard").toString
     val longDoc = (1 to 2000).map(i => s"w$i").mkString(" ") // ~166 chunks at W=16/S=12
     Seq((1L, longDoc, "s")).toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -22,7 +22,7 @@ import graft.operators.Similarity
 class MemoSpec extends SparkSpec {
 
   private lazy val base =
-    java.nio.file.Files.createTempDirectory("memo_spec").toString
+    SparkSpec.tempDir("memo_spec").toString
 
   /** 48 rows of (id, vec: 8 floats) whose values depend on `seed`, plus
     * one constant filler column per name in `extra`. */

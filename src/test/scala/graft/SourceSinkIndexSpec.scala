@@ -22,7 +22,7 @@ class SourceSinkIndexSpec extends SparkSpec {
     val li = Tables.t(spark, sf001, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       .limit(100)
-    val tmp = java.nio.file.Files.createTempDirectory("srcsink").toString
+    val tmp = SparkSpec.tempDir("srcsink").toString
 
     li.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
     val csv = spark.read.option("header", "true").option("inferSchema", "true").csv(s"$tmp/csv")
@@ -40,7 +40,7 @@ class SourceSinkIndexSpec extends SparkSpec {
   test("partitioned parquet sink prunes partitions on read") {
     val li = Tables.t(spark, sf001, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
-    val tmp = java.nio.file.Files.createTempDirectory("psink").toString
+    val tmp = SparkSpec.tempDir("psink").toString
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
     val back = spark.read.parquet(tmp).filter(col("l_returnflag") === "R")
     val p = back.queryExecution.explainString(

@@ -31,8 +31,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** A fresh temp directory, deleted with its contents at JVM exit. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    graft.queries.Tables.deleteOnExit(d)
+    d
+  }
+
   lazy val session: SparkSession = {
-    val tmp = java.nio.file.Files.createTempDirectory("spark-test").toString
+    val tmp = tempDir("spark-test").toString
     System.setProperty("derby.system.home", tmp)
     // the engine's own session defaults, so tests run under the confs
     // every entry point runs under

@@ -22,8 +22,7 @@ class StreamDirTableSpec extends SparkSpec {
   /** sf001's events, documents and embeddings, each respooled into a
     * directory of 3 part files. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("stream_dir_spec")
-    Tables.deleteOnExit(d)
+    val d = SparkSpec.tempDir("stream_dir_spec")
     tables.foreach { t =>
       spark.read.parquet(s"$sf001/$t.parquet").repartition(3)
         .write.parquet(s"$d/$t.parquet")

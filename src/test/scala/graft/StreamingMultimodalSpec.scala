@@ -60,6 +60,54 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(spark.conf.getOption(key) == before)
   }
 
+  test("a replay leaves the caller's stream conf in place while it runs and after concurrent replays") {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    def snapshot() = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val callerParts = spark.conf.get(keys.head)
+    // a partition count no replay sets, so a leftover "4" or "8" shows
+    spark.conf.set(keys.head, "5")
+    val before = snapshot()
+    val progressed = Promise[Unit]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == "conf_race_transitions") progressed.trySuccess(())
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    spark.streams.addListener(listener)
+    try {
+      // transitionsOnce drains three waves; read the conf after the first
+      val run = Future(StreamOps.transitionsOnce(spark, sf001, sinkName = "conf_race_transitions"))
+      Await.result(progressed.future, 5.minutes)
+      val during = snapshot()
+      Await.result(run, 5.minutes)
+      assert(during === before)
+      val twins: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+        () => StreamOps.transitionsOnce(spark, sf001, sinkName = "conf_race_1"),
+        () => StreamOps.ohlcOnce(spark, sf001, "conf_race_2"),
+        () => StreamOps.resampleOnceMem(spark, sf001, "1 day", "conf_race_3"),
+        () => StreamOps.updateCountsOnce(spark, sf001, "conf_race_4"),
+        () => StreamOps.domainCapOnceTws(spark, sf001, cap = 3, sinkName = "conf_race_5"),
+        () => StreamOps.dedupOnce(spark, sf001, Seq("text"), "conf_race_6"),
+        () => StreamOps.holtOnce(spark, sf001, sinkName = "conf_race_7"),
+        () => StreamOps.staticJoinOnce(spark, sf001, "conf_race_8"))
+      val results = Await.result(Future.traverse(twins)(t => Future(t())), 10.minutes)
+      assert(snapshot() === before)
+      assert(results.forall(!_.isEmpty))
+    } finally {
+      spark.streams.removeListener(listener)
+      pool.shutdown()
+      spark.conf.set(keys.head, callerParts)
+    }
+  }
+
   test("MemoryStream resample equals file-source streaming resample") {
     val viaFile = StreamOps.resampleOnce(spark, sf001, "1 day", "spec_file_sink")
       .orderBy("bucket").collect()

@@ -150,7 +150,7 @@ class SwiftSelectorSpec extends SparkSpec {
   test("job budget: one preview job per selector call on a parquet read, none when forced") {
     // lineitem respooled into 4 part files, so the preview reads 4 partitions;
     // q is l_quantity with about 1 row in 7 null
-    val dir = java.nio.file.Files.createTempDirectory("swift-jobs").resolve("lineitem").toString
+    val dir = SparkSpec.tempDir("swift-jobs").resolve("lineitem").toString
     spark.read.parquet(s"$sf001/lineitem.parquet")
       .withColumn("q", when((col("l_orderkey") + col("l_linenumber")) % 7 =!= 0, col("l_quantity")))
       .repartition(4).write.parquet(dir)
