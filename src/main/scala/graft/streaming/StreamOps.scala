@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.GraftStateBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
@@ -68,14 +69,29 @@ object StreamOps {
     *     on one session cannot leave each other's values behind.
     *  1. Drive: run each wave (e.g. `() => ms.addData(chunk)`), then
     *     `processAllAvailable()` on every query; with no waves, drain once.
-    *  1. Stop every started query and delete the checkpoint dir, in
-    *     `finally`: a bounded replay has no durability to preserve.
+    *  1. Stop every query, and copy each memory sink's rows into a
+    *     driver-local frame (a `LocalRelation` of unsafe rows). The
+    *     memory sink still does the run's Append/Update/Complete
+    *     bookkeeping; only its result leaves the run.
+    *  1. Leave nothing behind, in `finally`: close every state store a
+    *     query loaded, clear every memory sink and drop its temp view,
+    *     and delete the checkpoint dir (a bounded replay has no
+    *     durability to preserve). Spark unloads a stopped query's stores
+    *     only in its maintenance task, every 60 s, so without the close
+    *     each replay's providers, with a 4-thread checkpoint pool each
+    *     (and a RocksDB instance for `transformWithState`), pile up for
+    *     that long (SCALING.md, "What a bounded replay leaves behind").
+    *     The close acts in the JVM that calls `replay`, which holds every
+    *     store under a local master; a cluster's executors keep Spark's
+    *     maintenance-based unload.
     *
     * Each query comes with the function that configures its writer
-    * (format, name, output mode); [[memory]] gives the memory-table one. */
+    * (format, name, output mode); [[memory]] gives the memory-table one,
+    * whose name still tags the query's progress events. Returns the
+    * frames of the memory-sink queries, in query order. */
   private[graft] def replay(spark: SparkSession, parts: String,
       waves: Seq[() => Any] = Nil)(
-      queries: (DataFrame, DataStreamWriter[Row] => DataStreamWriter[Row])*): Unit = {
+      queries: (DataFrame, DataStreamWriter[Row] => DataStreamWriter[Row])*): Seq[DataFrame] = {
     val ckpt = ckptDir()
     val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
     try {
@@ -105,8 +121,20 @@ object StreamOps {
         wave()
         started.foreach(_.processAllAvailable())
       }
-    } finally {
       started.foreach(_.stop())
+      // a memory sink reports an empty schema; its rows have the query's
+      started.toSeq.zip(queries).flatMap { case (q, (df, _)) =>
+        GraftBridge.memorySink(q).map(m => GraftBridge.localFrame(spark, df.schema, m.allData))
+      }
+    } finally {
+      started.foreach { q =>
+        q.stop()
+        GraftStateBridge.unload(q)
+        GraftBridge.memorySink(q).foreach { m =>
+          m.clear()
+          q.sparkSession.catalog.dropTempView(q.name)
+        }
+      }
       val walk = Files.walk(ckpt)
       try walk.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
       finally walk.close()
@@ -176,8 +204,7 @@ object StreamOps {
       .agg(sum(col("value").cast(DecimalType(20, 6))).cast("double").as("day_sum"),
         count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("day_sum"), col("n"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming resample over a [[MemoryStream]] source: identical
@@ -204,8 +231,7 @@ object StreamOps {
       .agg(sum(col("value").cast(DecimalType(20, 6))).cast("double").as("day_sum"),
         count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("day_sum"), col("n"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming exact dedup: `dropDuplicates` on the content column under
@@ -215,8 +241,7 @@ object StreamOps {
   def dedupOnce(spark: SparkSession, dir: String, keyCols: Seq[String],
       sinkName: String = "stream_dedup_sink"): DataFrame = {
     val src = fileStream(spark, dir, "documents")
-    replay(spark, "4")(src.dropDuplicates(keyCols) -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(src.dropDuplicates(keyCols) -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming near-duplicate detection against an indexed historical
@@ -267,9 +292,9 @@ object StreamOps {
       .filter(col("j") >= tau)
       .select(col("id"), col("match_id"), col("j"))
       .dropDuplicates("id", "match_id")
-    replay(spark, "4")(verified -> memory(sinkName, OutputMode.Append()))
+    val out = replay(spark, "4")(verified -> memory(sinkName, OutputMode.Append())).head
     hist.unpersist()
-    spark.table(sinkName)
+    out
   }
 
   /** Streaming OHLC: the finance resample (open/high/low/close per
@@ -295,8 +320,7 @@ object StreamOps {
         min(col("value")).as("low"), max_by(col("value"), ord).as("close"))
       .select(unix_micros(col("w.start")).as("bucket_us"),
         col("open"), col("high"), col("low"), col("close"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming decontamination: the online-ingestion twin of
@@ -322,8 +346,7 @@ object StreamOps {
       .filter(col("doc_id") % evalMod =!= 0)
     val agg = grams(src).join(broadcast(ev), "g")
       .groupBy("id").agg(count(lit(1)).as("n_hits"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming contamination-RATE twin — the "new benchmark arrives"
@@ -353,8 +376,7 @@ object StreamOps {
         count(lit(1)).as("n_grams"),
         count(col("hit")).as("n_hit"))
       .withColumn("rate", col("n_hit") / col("n_grams"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming content-defined chunking — `Chunking.cdcChunks` over a
@@ -369,8 +391,7 @@ object StreamOps {
       sinkName: String = "stream_cdc_chunks_sink"): DataFrame = {
     val src = fileStream(spark, dir, "documents")
     val out = graft.operators.Chunking.cdcChunks(src, "doc_id", "text", n, modK)
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming PII exposure audit — `TextAnalysis.piiStats` over a live
@@ -384,8 +405,7 @@ object StreamOps {
       sinkName: String = "stream_pii_stats_sink"): DataFrame = {
     val src = fileStream(spark, dir, "documents")
     val agg = graft.operators.TextAnalysis.piiStats(src, "source", "text", patterns)
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
   }
 
   /** Streaming C4 line cleaning — the online-ingestion twin of
@@ -402,8 +422,7 @@ object StreamOps {
       graft.operators.TextAnalysis.segmentLines(src, "doc_id", "text", wordsPerLine),
       "id", "text", minWordsPerLine = minWords, minLines = minLines,
       badWords = badWords)
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming winnowed-fingerprint extraction — live fingerprint
@@ -417,8 +436,7 @@ object StreamOps {
       sinkName: String = "stream_winnow_sink"): DataFrame = {
     val src = fileStream(spark, dir, "documents")
     val out = graft.operators.TextAnalysis.winnow(src, "doc_id", "text", w)
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming importance/quality scoring — model APPLICATION at
@@ -434,8 +452,7 @@ object StreamOps {
     val src = fileStream(spark, dir, "documents")
     val out = graft.operators.Mixture.importanceScore(
       src, "doc_id", "text", table, buckets)
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming PQ encoding — index MAINTENANCE at ingestion time: the
@@ -522,8 +539,7 @@ object StreamOps {
     val out = fx.select(col("id"),
         explode(array(codeStructs.toIndexedSeq: _*)).as("p"))
       .select(col("id"), col("p.m").as("m"), col("p.cid").as("cid"))
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming k-means assignment — online cluster labeling at
@@ -573,8 +589,7 @@ object StreamOps {
       .withColumn("__best", array_min(array(cands.toIndexedSeq: _*)))
       .select(col("id"), col("__best.cid").as("cid"),
         col("__best.d2").as("d2"))
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming OOV tagging — tokenizer-coverage monitoring at ingestion
@@ -597,8 +612,7 @@ object StreamOps {
     val out = src.select(col("doc_id").as("id"),
       size(ws).cast("long").as("n_tokens"),
       size(filter(ws, w => !array_contains(vlit, w))).cast("long").as("n_oov"))
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** The funnel advance rule, shared by BOTH streaming twins (they
@@ -653,8 +667,7 @@ object StreamOps {
       }
       .toDF("user_id", "t1_us", "t2_us", "t3_us")
       .filter(col("t1_us") >= 0)
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
   }
 
   /** Per-user funnel front as a Spark 4 `transformWithState`
@@ -738,8 +751,8 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("cohort_week", "week_offset", "user_id")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName).distinct()
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
+      .distinct()
       .groupBy(col("cohort_week"), col("week_offset"))
       .agg(count(lit(1)).as("n_active"))
   }
@@ -766,8 +779,7 @@ object StreamOps {
         OutputMode.Update())
       .toDF("user_id", "t1_us", "t2_us", "t3_us")
       .filter(col("t1_us") >= 0)
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
   }
 
   /** Per-domain first-come quota state: ONE long per domain (docs kept
@@ -860,10 +872,9 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("from_type", "to_type")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append()))
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
-    spark.table(sinkName)
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append())).head
       .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
       .withColumn("n_from", sum(col("n")).over(wf))
       .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
@@ -891,10 +902,9 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("from_type", "to_type")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append())).head
       .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
       .withColumn("n_from", sum(col("n")).over(wf))
       .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
@@ -983,8 +993,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("k", "seq", "v", "alive")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
       .filter(col("__f.alive") === 1)
@@ -1091,8 +1100,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("k", "seq", "v", "alive")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
       .filter(col("__f.alive") === 1)
@@ -1121,8 +1129,7 @@ object StreamOps {
         OutputMode.Update())
       .toDF("doc_id", "domain", "key_rank")
     replay(spark, "8", Seq(b1, b2).map(b => () => ms.addData(b.toIndexedSeq)))(
-      out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+      out -> memory(sinkName, OutputMode.Update())).head
   }
 
   /** Streaming multi-touch attribution state: per key, the PENDING
@@ -1195,8 +1202,7 @@ object StreamOps {
         OutputMode.Append())
       .toDF("user_id", "touch_id", "conv_id", "n_touches",
         "linear_micro", "last_touch_micro")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** FILE-SOURCE twin of [[attributionOnce]] — the pending-touch
@@ -1226,8 +1232,7 @@ object StreamOps {
         OutputMode.Append())
       .toDF("user_id", "touch_id", "conv_id", "n_touches",
         "linear_micro", "last_touch_micro")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming SCD Type-2 state: per key, the open version (attr,
@@ -1295,8 +1300,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("user_id", "attr", "from_us", "to_raw")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("user_id", "attr", "from_us")
       .agg(max(col("to_raw")).as("__to"))
       .select(col("user_id"), col("attr"), col("from_us"),
@@ -1329,8 +1333,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("user_id", "attr", "from_us", "to_raw")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("user_id", "attr", "from_us")
       .agg(max(col("to_raw")).as("__to"))
       .select(col("user_id"), col("attr"), col("from_us"),
@@ -1450,8 +1453,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("event_id", "level_micro", "forecast_micro")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update()))
-    spark.table(sinkName)
+    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update())).head
   }
 
   /** Streaming heavy hitters: candidates stream through shard-keyed
@@ -1484,8 +1486,9 @@ object StreamOps {
     // replay in several batches so the MG ValueState genuinely carries
     // and merges across micro-batches (each batch emits its shard's
     // current candidates; the union across batches stays a superset)
-    replay(spark, "8", chunkWaves(ms, toks))(out -> memory(sinkName, OutputMode.Update()))
-    val cands = spark.table(sinkName).select("token").distinct()
+    val cands = replay(spark, "8", chunkWaves(ms, toks))(
+        out -> memory(sinkName, OutputMode.Update())).head
+      .select("token").distinct()
     val n = docs.select(explode(split(col("text"), " ")).as("token"))
       .agg(count(lit(1)).as("n"))
     graft.operators.TextAnalysis.exactOverCandidates(
@@ -1523,8 +1526,8 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("token")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update()))
-    val cands = spark.table(sinkName).select("token").distinct()
+    val cands = replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
+      .select("token").distinct()
     val n = docs.select(explode(split(col("text"), " ")).as("token"))
       .agg(count(lit(1)).as("n"))
     graft.operators.TextAnalysis.exactOverCandidates(
@@ -1559,8 +1562,7 @@ object StreamOps {
     val out = src.select(col("doc_id").as("id"), explode(hits).as("ph"))
       .select(col("ph.phrase").as("phrase"), col("id"), col("ph.n_matches").as("n_matches"))
       .filter(col("n_matches") > 0)
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming weighted retention — admission control at ingestion
@@ -1579,8 +1581,7 @@ object StreamOps {
     val out = graft.operators.Sampling.weighted(
       src.select(col("doc_id"), col("source"), w.as("keep_w")),
       "doc_id", col("keep_w"))
-    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "4")(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming vocabulary: COMPLETE-mode running token counts over a
@@ -1595,8 +1596,8 @@ object StreamOps {
     val src = fileStream(spark, dir, "documents")
     val agg = src.select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
-    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete()))
-    spark.table(sinkName).orderBy(col("n").desc, col("token")).limit(k)
+    replay(spark, "4")(agg -> memory(sinkName, OutputMode.Complete())).head
+      .orderBy(col("n").desc, col("token")).limit(k)
   }
 
   /** Bounded-replay harness for [[sessionizeStream]]: all events arrive
@@ -1618,8 +1619,8 @@ object StreamOps {
     ms.addData(recs.toIndexedSeq)
     val src = ms.toDF().toDF("user_id", "ts_us", "value", "event_id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    replay(spark, "8")(sessionizeStream(src, gapMinutes) -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "8")(
+      sessionizeStream(src, gapMinutes) -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Bounded-replay harness for [[sessionizeStreamEventTime]]: real events
@@ -1694,13 +1695,12 @@ object StreamOps {
       val tag = math.abs((dir, gapMinutes).hashCode())
       val etSink = s"stream_sess_et_$tag"
       val natSink = s"stream_sess_native_$tag"
-        replay(spark, "8", Seq(
+      val Seq(et, nat) = replay(spark, "8", Seq(
           () => ms.addData(recs.toIndexedSeq :+ ((-1L, maxUs + 365L * 86400L * 1000000L, 0.0, 0L))),
           () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, 0.0, 1L)))))(
         sessionizeStreamEventTime(src, gapMinutes) -> memory(etSink, OutputMode.Append()),
         native -> memory(natSink, OutputMode.Append()))
-      (spark.table(etSink).filter(col("user_id") >= 0),
-        spark.table(natSink).filter(col("user_id") >= 0))
+      (et.filter(col("user_id") >= 0), nat.filter(col("user_id") >= 0))
     }
   }
 
@@ -1738,8 +1738,8 @@ object StreamOps {
         () => ms.addData(recs.toIndexedSeq :+
           ((-1L, maxUs + 365L * 86400L * 1000000L, "view", 0L))),
         () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, "view", 1L)))))(
-      out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName).filter(col("user_id") >= 0)
+      out -> memory(sinkName, OutputMode.Append())).head
+      .filter(col("user_id") >= 0)
   }
 
   /** FILE-SOURCE twin of [[sessionizeDynamicOnce]] — native dynamic-gap
@@ -1780,8 +1780,8 @@ object StreamOps {
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName).filter(col("user_id") >= 0)
+    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append())).head
+      .filter(col("user_id") >= 0)
   }
 
   /** Stream-stream INTERVAL JOIN: every left-type event paired with the
@@ -1857,13 +1857,12 @@ object StreamOps {
       val tag = math.abs((dir, leftType, rightType, windowMinutes).hashCode())
       val innerSink = s"stream_ij_inner_$tag"
       val leftSink = s"stream_ij_left_$tag"
-      replay(spark, "8", Seq(
+      val Seq(inner, leftOuter) = replay(spark, "8", Seq(
           () => ms.addData(recs.toIndexedSeq ++ sentinels(maxUs + 365L * 86400L * 1000000L)),
           () => ms.addData(sentinels(maxUs + 2L * 365L * 86400L * 1000000L))))(
         joined("inner") -> memory(innerSink, OutputMode.Append()),
         joined("left_outer") -> memory(leftSink, OutputMode.Append()))
-      (spark.table(innerSink).filter(col("user_id") >= 0),
-        spark.table(leftSink).filter(col("user_id") >= 0))
+      (inner.filter(col("user_id") >= 0), leftOuter.filter(col("user_id") >= 0))
     }
   }
 
@@ -1933,8 +1932,7 @@ object StreamOps {
         count(lit(1)).as("user_n"))
     val joined = src.join(broadcast(profile), "user_id")
       .select(col("event_id"), col("user_id"), col("user_total"), col("user_n"))
-    replay(spark, "8")(joined -> memory(sinkName, OutputMode.Append()))
-    spark.table(sinkName)
+    replay(spark, "8")(joined -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** UPDATE-mode streaming aggregation: per-user running (count, sum)
@@ -1963,11 +1961,10 @@ object StreamOps {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(20, 6))).cast("double").as("vsum"))
-    replay(spark, "8", Seq(b1, b2).map(b => () => ms.addData(b.toIndexedSeq)))(
-      agg -> memory(sinkName, OutputMode.Update()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n").desc)
-    spark.table(sinkName)
+    replay(spark, "8", Seq(b1, b2).map(b => () => ms.addData(b.toIndexedSeq)))(
+        agg -> memory(sinkName, OutputMode.Update())).head
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source gate for the stream twins: `StreamOps.replay` is the only code
   * that writes, starts, drains or checkpoints a streaming query, or sets
   * the state-store provider — so the conf a replay sets is set under its
-  * lock and restored at start, and no twin spells the protocol out again. */
+  * lock and restored at start, and no twin spells the protocol out again —
+  * and a twin's result is the frame `replay` returns, not a session table. */
 class StreamReplayGateSpec extends AnyFunSuite {
 
   private val replayOnly = Seq("writeStream", ".start()", "processAllAvailable",
@@ -54,6 +55,13 @@ class StreamReplayGateSpec extends AnyFunSuite {
       .filter(p => code(read(p)).contains("writeStream"))
       finally walk.close()
     assert(writers.isEmpty, s"a stream written outside StreamOps.replay: $writers")
+  }
+
+  test("no stream twin reads a memory sink back as a session table") {
+    val ops = Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
+    val reads = code(read(ops)).linesIterator.zipWithIndex
+      .collect { case (l, i) if l.contains("spark.table(") => i + 1 }.toSeq
+    assert(reads.isEmpty, s"use the frame replay returns, not the sink's temp view; lines $reads")
   }
 
   test("the gate flags a token outside replay and passes one inside it or in a comment") {

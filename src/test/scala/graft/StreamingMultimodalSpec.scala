@@ -60,6 +60,33 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(spark.conf.getOption(key) == before)
   }
 
+  test("a bounded replay closes its state stores and returns a local frame, not a memory sink") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
+    // each loaded state-store provider holds a checkpoint manager with a
+    // pool of these threads until the provider is closed
+    def checksumThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && t.getName.startsWith("ChecksumCheckpointFileManager-Thread"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val twins = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "unload_ohlc_sink" -> (StreamOps.ohlcOnce(spark, sf001, _)),               // HDFS-backed
+      "unload_transitions_sink" -> (StreamOps.transitionsOnce(spark, sf001, _))) // RocksDB
+    twins.foreach { case (sink, twin) =>
+      val before = checksumThreads()
+      val df = twin(sink)
+      val left = checksumThreads() -- before
+      assert(left.size === 0,
+        s"$sink left ${left.size} threads, e.g. ${left.take(2).map(_.getName)}")
+      assert(!spark.catalog.tableExists(sink), s"$sink is still a table of the session")
+      val plan = df.queryExecution.logical
+      assert(plan.exists(_.isInstanceOf[LocalRelation]), plan.treeString)
+      assert(!plan.exists(_.isInstanceOf[MemoryPlan]), plan.treeString)
+      assert(rows(df).nonEmpty)
+      assert(rows(df) === rows(twin(sink)))
+    }
+  }
+
   test("a replay leaves the caller's stream conf in place while it runs and after concurrent replays") {
     import scala.concurrent.{Await, ExecutionContext, Future, Promise}
     import scala.concurrent.duration._
