@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, GraftBridge, Row,
+  SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.streaming.state.GraftStateBridge
@@ -44,7 +45,7 @@ object StreamOps {
     *       × throughput.)
     *     - no-data microbatches off: every replay sequences watermark
     *       advancement with explicit data waves (the two-sentinel pattern
-    *       in [[sessionizeSharedRun]]), so watermark-only batches are pure
+    *       in [[sentinelReplay]]), so watermark-only batches are pure
     *       per-batch state-store overhead.
     *     - checkpoint files written through Spark's
     *       `FileSystemBasedCheckpointFileManager`. The default manager for
@@ -156,6 +157,64 @@ object StreamOps {
   private def chunkWaves[A](ms: MemoryStream[A], recs: Array[A]): Seq[() => Any] =
     recs.grouped(math.max(1, (recs.length + Batches - 1) / Batches)).toSeq
       .map(chunk => () => ms.addData(chunk.toIndexedSeq))
+
+  /** Where a stateful twin's input comes from. The twin's query, state and
+    * result are the same for both; only the ingest route differs. */
+  sealed trait Ingest
+  object Ingest {
+    /** The feed collected on the driver, in its order, and added to a
+      * MemoryStream in [[Batches]] waves — the bounded-replay harness. */
+    case object Memory extends Ingest
+    /** The feed staged as one mtime-pinned parquet file per wave and read
+      * back one file per microbatch — the production no-collect route: no
+      * row visits the driver. */
+    case object Files extends Ingest
+  }
+
+  /** A stateful twin's input as a stream of `A`, with the waves that drive
+    * its replay: `collected` through a MemoryStream ([[chunkWaves]]), or
+    * `staged` (a [[waveStream]], which drives itself). Only the frame the
+    * ingest reads is built. */
+  private def ingested[A: Encoder](ingest: Ingest, collected: => DataFrame,
+      staged: => DataFrame): (Dataset[A], Seq[() => Any]) = ingest match {
+    case Ingest.Memory =>
+      val feed = collected
+      val ms = MemoryStream[A](implicitly[Encoder[A]], feed.sparkSession.sqlContext)
+      (ms.toDS(), chunkWaves(ms, feed.as[A].collect()))
+    case Ingest.Files => (staged.as[A], Nil)
+  }
+
+  /** One year in microseconds: how far past the last event each drain
+    * sentinel lands. */
+  private val YearUs = 365L * 86400L * 1000000L
+
+  /** One bounded replay of `query` over `dir`'s events, drained by two
+    * sentinels, with the sentinel rows filtered from its result. The
+    * stream's rows are (user_id, ts_us, `attr`, event_id) plus `ts`; a
+    * sentinel is one row per value in `sentinelAttrs`, of user −1.
+    *
+    * TWO micro-batches: sentinel 1, a year past the last event, rides IN
+    * the data batch, so the watermark committed after batch 1 is already
+    * past every real event; batch 2 (sentinel 2, a year later still) then
+    * closes or evicts every real session, window or join row
+    * deterministically. Timeout and watermark eviction in batch N use the
+    * watermark committed by batch N−1, which is why one trailing sentinel
+    * batch suffices, and why at least one is needed. */
+  private def sentinelReplay(spark: SparkSession, dir: String, sinkName: String,
+      attr: String, sentinelAttrs: Any*)(query: DataFrame => DataFrame): DataFrame = {
+    val feed = graft.queries.Tables.t(spark, dir, "events")
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col(attr), col("event_id"))
+    val recs = feed.collect()
+    val maxUs = recs.iterator.map(_.getLong(1)).max
+    def sentinel(ts: Long): Seq[Row] = sentinelAttrs.map(a => Row(-1L, ts, a, -1L))
+    val ms = MemoryStream[Row](Encoders.row(feed.schema), spark.sqlContext)
+    val src = ms.toDF().withColumn("ts", timestamp_micros(col("ts_us")))
+    replay(spark, "8", Seq(
+        () => ms.addData(recs.toIndexedSeq ++ sentinel(maxUs + YearUs)),
+        () => ms.addData(sentinel(maxUs + 2L * YearUs))))(
+      query(src) -> memory(sinkName, OutputMode.Append())).head
+      .filter(col("user_id") >= 0)
+  }
 
   /** Fresh checkpoint dir, on tmpfs when the host has one. */
   private def ckptDir(): Path = {
@@ -854,19 +913,21 @@ object StreamOps {
   /** Streaming transition matrix: per-key last-event ValueState emits
     * steps online; the sink aggregate (counts + per-from totals + one
     * division) matches the batch tail, so the bounded (ts, id)-ordered
-    * replay shares rel_transitions' oracle verbatim. */
+    * replay shares rel_transitions' oracle verbatim. Through
+    * [[Ingest.Files]] the waves are three time ranges from one min/max
+    * broadcast ([[rangeWaves]]); ts-range waves keep each key's global
+    * (ts, id) order across the batch boundaries, so the emitted step
+    * multiset is the same through either ingest. */
   def transitionsOnce(spark: SparkSession, dir: String,
-      sinkName: String = "stream_transitions_sink"): DataFrame = {
+      sinkName: String = "stream_transitions_sink",
+      ingest: Ingest = Ingest.Memory): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val feed = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-      .orderBy("ts_us", "event_id")
-      .as[(Long, Long, Long, String)].collect()
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, String)]
-    val out = ms.toDS()
+    val (in, waves) = ingested[(Long, Long, Long, String)](ingest,
+      feed.orderBy("ts_us", "event_id"), rangeWaves(feed, "ts_us", "stream_trans_src"))
+    val out = in
       .groupByKey(_._1)
       .transformWithState(new TransitionsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -874,37 +935,7 @@ object StreamOps {
       .toDF("from_type", "to_type")
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append())).head
-      .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-      .withColumn("n_from", sum(col("n")).over(wf))
-      .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
-        (col("n").cast("double") / col("n_from").cast("double")).as("p"))
-  }
-
-  /** FILE-SOURCE twin of [[transitionsOnce]] — the last-event
-    * ValueState machine on the production no-collect ingest path
-    * ([[scd2OnceFile]]'s contract): three time-range waves from one
-    * min/max broadcast, mtime-pinned files, `maxFilesPerTrigger=1`
-    * microbatches. Ts-range waves keep each key's global (ts, id)
-    * order across the batch boundaries, so the emitted step multiset
-    * equals the batch lead() window's; sink aggregate and oracle are
-    * [[transitionsOnce]]'s verbatim. */
-  def transitionsOnceFile(spark: SparkSession, dir: String,
-      sinkName: String = "stream_transitions_file_sink"): DataFrame = {
-    import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-    val out = rangeWaves(feed0, "ts_us", "stream_trans_src")
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .transformWithState(new TransitionsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .toDF("from_type", "to_type")
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("from_type"))
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append())).head
+    replay(spark, "8", waves)(out -> memory(sinkName, OutputMode.Append())).head
       .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
       .withColumn("n_from", sum(col("n")).over(wf))
       .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
@@ -950,13 +981,7 @@ object StreamOps {
     }
   }
 
-  /** Streaming MERGE apply: the snapshot streams first as seq-0
-    * upserts, then the change batch, in global (seq, key) order across
-    * THREE replay batches (a churned key's upsert and its later delete
-    * can straddle a boundary — state must carry). RocksDB provider,
-    * Update mode; final table = per-key max-seq emission, alive rows
-    * only — equals the batch merge projected to (k, v). */
-  /** The CDC feed both merge twins replay: a seq-0 snapshot wave, then
+  /** The CDC feed of [[mergeOnceTws]]: a seq-0 snapshot wave, then
     * change waves 1 and 2 (updates, deletes, inserts, a re-delete and a
     * ghost delete — every MERGE edge case). One frame, (k, seq, op, v). */
   private def mergeFeed(spark: SparkSession, dir: String): DataFrame = {
@@ -978,22 +1003,30 @@ object StreamOps {
     target.unionAll(upd).unionAll(redel).unionAll(ins).unionAll(ghost)
   }
 
+  /** Streaming MERGE apply: the snapshot streams first as seq-0
+    * upserts, then the change batch, in global (seq, key) order across
+    * THREE replay batches (a churned key's upsert and its later delete
+    * can straddle a boundary — state must carry). RocksDB provider,
+    * Update mode; final table = per-key max-seq emission, alive rows
+    * only — equals the batch merge projected to (k, v). Through
+    * [[Ingest.Files]] each seq wave lands as its own parquet file and is
+    * its own microbatch, so the RocksDB ValueState carries across three
+    * genuine microbatches with no row on the driver. */
   def mergeOnceTws(spark: SparkSession, dir: String,
-      sinkName: String = "stream_merge_sink"): DataFrame = {
+      sinkName: String = "stream_merge_sink",
+      ingest: Ingest = Ingest.Memory): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = mergeFeed(spark, dir)
-      .as[(Long, Long, String, Long)].collect()
-      .sortBy(e => (e._2, e._1))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String, Long)]
-    val out = ms.toDS()
+    val feed = mergeFeed(spark, dir)
+    val (in, waves) = ingested[(Long, Long, String, Long)](ingest,
+      feed.orderBy("seq", "k"),
+      waveStream(feed, "seq", 0L to 2L, "stream_merge_src", feed.schema))
+    val out = in
       .groupByKey(_._1)
       .transformWithState(new MergeProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("k", "seq", "v", "alive")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update())).head
+    replay(spark, "8", waves)(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
       .filter(col("__f.alive") === 1)
@@ -1004,7 +1037,7 @@ object StreamOps {
     * strictly increasing mtimes so FileStreamSource's default
     * oldest-first order replays waves in wave order whatever the write
     * timing — the shared setup for the file-source streaming twins
-    * ([[mergeOnceFile]], [[scd2OnceFile]]). The wave column stays in
+    * ([[Ingest.Files]]). The wave column stays in
     * the file iff the caller's schema includes it (filter is on
     * `waveCol`; no columns are dropped here). */
   private[graft] def stageWaveFiles(feed: DataFrame, waveCol: String,
@@ -1078,33 +1111,6 @@ object StreamOps {
         .select(keep :+ col("__wave"): _*))(_ unionByName _)
     waveStream(waves, "__wave", 0L until 3L + more.size, prefix,
       feed.select(keep: _*).schema)
-  }
-
-  /** FILE-SOURCE twin of [[mergeOnceTws]]: the MemoryStream harness
-    * replays a driver collect (documented test-harness pattern); this
-    * variant proves the production no-collect ingest path END TO END —
-    * each seq wave lands as its own parquet file, `readStream` +
-    * `maxFilesPerTrigger=1` makes each wave its own microbatch (file
-    * order = modification time, pinned explicitly), and the RocksDB
-    * ValueState carries across the three genuine microbatches. No row
-    * ever visits the driver; the sink reconstruction and oracle are
-    * mergeOnceTws's verbatim. */
-  def mergeOnceFile(spark: SparkSession, dir: String,
-      sinkName: String = "stream_merge_file_sink"): DataFrame = {
-    import spark.implicits._
-    val feed = mergeFeed(spark, dir)
-    val out = waveStream(feed, "seq", 0L to 2L, "stream_merge_src", feed.schema)
-      .as[(Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new MergeProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .toDF("k", "seq", "v", "alive")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
-      .groupBy("k")
-      .agg(max_by(struct(col("v"), col("alive")), col("seq")).as("__f"))
-      .filter(col("__f.alive") === 1)
-      .select(col("k"), col("__f.v").as("v"))
   }
 
   /** Streaming domain quota on the `transformWithState` path: bounded
@@ -1181,58 +1187,30 @@ object StreamOps {
     }
   }
 
-  /** Streaming attribution — see [[AttributionProcessor]]. */
+  /** Streaming attribution — see [[AttributionProcessor]]. Through
+    * [[Ingest.Files]] the waves are three time ranges ([[rangeWaves]]):
+    * same-ts rows share a wave, so each user's global (ts, event_id)
+    * order holds across batch boundaries and the credited touch lists
+    * are the same through either ingest. */
   def attributionOnce(spark: SparkSession, dir: String,
-      sinkName: String = "stream_attr_sink"): DataFrame = {
+      sinkName: String = "stream_attr_sink",
+      ingest: Ingest = Ingest.Memory): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val feed = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
           * lit(1000000L)).cast("long").as("vm"))
-      .orderBy("ts_us", "event_id")
-      .as[(Long, Long, Long, String, Long)].collect()
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, String, Long)]
-    val out = ms.toDS()
+    val (in, waves) = ingested[(Long, Long, Long, String, Long)](ingest,
+      feed.orderBy("ts_us", "event_id"), rangeWaves(feed, "ts_us", "stream_attr_src"))
+    val out = in
       .groupByKey(_._1)
       .transformWithState(new AttributionProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("user_id", "touch_id", "conv_id", "n_touches",
         "linear_micro", "last_touch_micro")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Append())).head
-  }
-
-  /** FILE-SOURCE twin of [[attributionOnce]] — the pending-touch
-    * ListState machine on the production no-collect ingest path
-    * ([[scd2OnceFile]]'s contract): THREE time-range waves from one
-    * min/max aggregate broadcast back (no driver collect of rows), one
-    * mtime-pinned parquet file per wave, `maxFilesPerTrigger=1`
-    * microbatches in time order. Ts-range waves preserve each user's
-    * global (ts, event_id) order across batch boundaries (same-ts rows
-    * share a wave by construction), and the processor's in-batch sort
-    * orders within them — so the credited touch lists equal the
-    * MemoryStream replay's and the batch reverse-carry's exactly;
-    * oracle = rel_attribution's verbatim. */
-  def attributionOnceFile(spark: SparkSession, dir: String,
-      sinkName: String = "stream_attr_file_sink"): DataFrame = {
-    import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
-          * lit(1000000L)).cast("long").as("vm"))
-    val out = rangeWaves(feed0, "ts_us", "stream_attr_src")
-      .as[(Long, Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new AttributionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .toDF("user_id", "touch_id", "conv_id", "n_touches",
-        "linear_micro", "last_touch_micro")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Append())).head
+    replay(spark, "8", waves)(out -> memory(sinkName, OutputMode.Append())).head
   }
 
   /** Streaming SCD Type-2 state: per key, the open version (attr,
@@ -1282,58 +1260,26 @@ object StreamOps {
   /** Streaming SCD2 build — see [[Scd2Processor]]. The sink holds one
     * row per emitted version state; the final SELECT keeps each
     * (key, from)'s max(to) (a closed version supersedes its own open
-    * emission) and derives is_current. */
+    * emission) and derives is_current. Through [[Ingest.Files]] the
+    * waves are three time ranges ([[rangeWaves]]) replayed in time
+    * order, and the processor's own (ts, event_id) sort orders events
+    * within a wave, as it does within a MemoryStream chunk. */
   def scd2Once(spark: SparkSession, dir: String,
-      sinkName: String = "stream_scd2_sink"): DataFrame = {
+      sinkName: String = "stream_scd2_sink",
+      ingest: Ingest = Ingest.Memory): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val feed = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-      .orderBy("ts_us", "event_id")
-      .as[(Long, Long, Long, String)].collect()
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, String)]
-    val out = ms.toDS()
+    val (in, waves) = ingested[(Long, Long, Long, String)](ingest,
+      feed.orderBy("ts_us", "event_id"), rangeWaves(feed, "ts_us", "stream_scd2_src"))
+    val out = in
       .groupByKey(_._1)
       .transformWithState(new Scd2Processor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
       .toDF("user_id", "attr", "from_us", "to_raw")
-    replay(spark, "8", chunkWaves(ms, recs))(out -> memory(sinkName, OutputMode.Update())).head
-      .groupBy("user_id", "attr", "from_us")
-      .agg(max(col("to_raw")).as("__to"))
-      .select(col("user_id"), col("attr"), col("from_us"),
-        when(col("__to") >= 0, col("__to")).otherwise(lit(-1L)).as("to_us"),
-        (col("__to") < 0).cast("int").as("is_current"))
-  }
-
-  /** FILE-SOURCE twin of [[scd2Once]] — the production no-collect
-    * ingest path for the SCD2 state machine, [[mergeOnceFile]]'s
-    * contract: waves are THREE TIME-RANGE buckets of the event stream
-    * (bucket = (ts−t0)·3 div (t1−t0) from one min/max aggregate
-    * broadcast back — no driver collect of rows, no global window),
-    * each wave lands as its own mtime-pinned parquet file,
-    * `maxFilesPerTrigger=1` replays them as three genuine microbatches
-    * in time order, and the RocksDB open-version ValueState carries
-    * across the batch boundaries. Within a wave the processor's own
-    * (ts, event_id) sort orders events, exactly as the MemoryStream
-    * replay's chunking; sink reconstruction and oracle are
-    * [[scd2Once]]'s verbatim. */
-  def scd2OnceFile(spark: SparkSession, dir: String,
-      sinkName: String = "stream_scd2_file_sink"): DataFrame = {
-    import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-    val out = rangeWaves(feed0, "ts_us", "stream_scd2_src")
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .transformWithState(new Scd2Processor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .toDF("user_id", "attr", "from_us", "to_raw")
-    replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
+    replay(spark, "8", waves)(out -> memory(sinkName, OutputMode.Update())).head
       .groupBy("user_id", "attr", "from_us")
       .agg(max(col("to_raw")).as("__to"))
       .select(col("user_id"), col("attr"), col("from_us"),
@@ -1462,22 +1408,25 @@ object StreamOps {
     * set — the production split (cheap online candidate tracking,
     * periodic exact reconciliation). The final output is EXACT, equal
     * to the batch [[graft.operators.TextAnalysis.heavyHitters]], so the
-    * twin shares the `text_heavy_hitters` oracle verbatim. */
+    * twin shares the `text_heavy_hitters` oracle verbatim. Through
+    * [[Ingest.Files]] the waves are three doc_id ranges
+    * ([[rangeWaves]]); wave order is immaterial here, since the
+    * cross-batch candidate union stays a superset either way. */
   def heavyHittersOnce(spark: SparkSession, dir: String, counters: Int,
       share: Int, shards: Int,
-      sinkName: String = "stream_hh_sink"): DataFrame = {
+      sinkName: String = "stream_hh_sink",
+      ingest: Ingest = Ingest.Memory): DataFrame = {
     require(counters >= share, "counters >= share (superset guarantee)")
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.queries.Tables.t(spark, dir, "documents")
-    val toks = docs
-      .select(explode(split(col("text"), " ")).as("token"))
-      .select(pmod(hash(col("token")), lit(shards)).cast("long").as("shard"),
+    val feed = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+      .select(col("doc_id"),
+        pmod(hash(col("token")), lit(shards)).cast("long").as("shard"),
         col("token"))
-      .as[(Long, String)].collect()
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val out = ms.toDS()
+    val (in, waves) = ingested[(Long, String)](ingest, feed.select("shard", "token"),
+      rangeWaves(feed, "doc_id", "stream_hh_src", Seq("shard", "token")))
+    val out = in
       .groupByKey(_._1)
       .transformWithState(new MgProcessor(counters),
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -1486,47 +1435,7 @@ object StreamOps {
     // replay in several batches so the MG ValueState genuinely carries
     // and merges across micro-batches (each batch emits its shard's
     // current candidates; the union across batches stays a superset)
-    val cands = replay(spark, "8", chunkWaves(ms, toks))(
-        out -> memory(sinkName, OutputMode.Update())).head
-      .select("token").distinct()
-    val n = docs.select(explode(split(col("text"), " ")).as("token"))
-      .agg(count(lit(1)).as("n"))
-    graft.operators.TextAnalysis.exactOverCandidates(
-      docs, "text", cands, n, share)
-  }
-
-  /** FILE-SOURCE twin of [[heavyHittersOnce]] — the heaviest remaining
-    * MemoryStream replay moved onto the production no-collect ingest
-    * path ([[mergeOnceFile]]/[[scd2OnceFile]]'s contract): the token
-    * feed buckets into THREE doc_id-range waves from one min/max
-    * aggregate broadcast back (no driver collect of rows), each wave
-    * lands as its own mtime-pinned parquet file, `maxFilesPerTrigger=1`
-    * replays them as three genuine microbatches, and the shard-keyed
-    * Misra-Gries ValueState carries and merges across the batch
-    * boundaries. Wave ORDER is immaterial here (unlike SCD2): each
-    * batch emits its shard's current candidates and the cross-batch
-    * union stays a candidate SUPERSET, which the one exact batch pass
-    * then reconciles — output EXACT == the batch heavy hitters, oracle
-    * shared verbatim. */
-  def heavyHittersOnceFile(spark: SparkSession, dir: String, counters: Int,
-      share: Int, shards: Int,
-      sinkName: String = "stream_hh_file_sink"): DataFrame = {
-    require(counters >= share, "counters >= share (superset guarantee)")
-    import spark.implicits._
-    val docs = graft.queries.Tables.t(spark, dir, "documents")
-    val toks0 = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .select(col("doc_id"),
-        pmod(hash(col("token")), lit(shards)).cast("long").as("shard"),
-        col("token"))
-    val out = rangeWaves(toks0, "doc_id", "stream_hh_src", Seq("shard", "token"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .transformWithState(new MgProcessor(counters),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .toDF("token")
-    val cands = replay(spark, "8")(out -> memory(sinkName, OutputMode.Update())).head
+    val cands = replay(spark, "8", waves)(out -> memory(sinkName, OutputMode.Update())).head
       .select("token").distinct()
     val n = docs.select(explode(split(col("text"), " ")).as("token"))
       .agg(count(lit(1)).as("n"))
@@ -1623,124 +1532,56 @@ object StreamOps {
       sessionizeStream(src, gapMinutes) -> memory(sinkName, OutputMode.Append())).head
   }
 
-  /** Bounded-replay harness for [[sessionizeStreamEventTime]]: real events
-    * arrive as one batch, then a far-future sentinel event (user_id = -1)
-    * advances the watermark past every open session's timeout, so EVERY
-    * real session is emitted — gap-closed ones by the data path,
-    * open tails by the event-time timeout path — and per-user state is
-    * freed as each timeout fires. The oracle is therefore the FULL batch
-    * sessionization (no open-tail anti-join), which is exactly the
-    * bounded-state claim: stream-with-expiry == batch on a bounded source.
-    * Runs on the SHARED replay with the native twin — see
-    * [[sessionizeSharedRun]]. */
+  /** Bounded-replay harness for [[sessionizeStreamEventTime]]: the
+    * [[sentinelReplay]] drain advances the watermark past every open
+    * session's timeout, so EVERY real session is emitted — gap-closed ones
+    * by the data path, open tails by the event-time timeout path — and
+    * per-user state is freed as each timeout fires. The oracle is
+    * therefore the FULL batch sessionization (no open-tail anti-join),
+    * which is exactly the bounded-state claim: stream-with-expiry == batch
+    * on a bounded source. */
   def sessionizeOnceEventTime(spark: SparkSession, dir: String,
-      gapMinutes: Long): DataFrame =
-    sessionizeSharedRun(spark, dir, gapMinutes)._1
+      gapMinutes: Long, sinkName: String = "stream_sess_et_sink"): DataFrame =
+    sentinelReplay(spark, dir, sinkName, "value", 0.0)(
+      sessionizeStreamEventTime(_, gapMinutes))
 
   /** Native `session_window` sessionization under Structured Streaming —
     * Spark's built-in streaming session operator (state merging, gap
     * extension and watermark eviction all inside the engine), the twin of
     * the batch `sessionize_native` query. Append mode emits a session
     * once the watermark passes its end (= last event + gap); the
-    * two-sentinel pattern closes every real session deterministically, so
-    * the oracle is the FULL batch session_window result. Runs on the
-    * SHARED replay with the event-time twin — see [[sessionizeSharedRun]]. */
+    * [[sentinelReplay]] drain closes every real session deterministically,
+    * so the oracle is the FULL batch session_window result. */
   def sessionizeOnceNative(spark: SparkSession, dir: String,
-      gapMinutes: Long): DataFrame =
-    sessionizeSharedRun(spark, dir, gapMinutes)._2
-
-  /** ONE bounded replay drives BOTH stateful sessionize queries — the
-    * hand-rolled event-time-expiry flatMapGroupsWithState form and the
-    * native `session_window` form subscribe to the SAME MemoryStream and
-    * drain the same two micro-batches CONCURRENTLY. That is the
-    * multiplexed-source shape of a production deployment (one source
-    * feeding N queries, each with its own checkpoint + state store), and
-    * it halves the harness cost of running two separate replays over
-    * identical input. Memoized ([[graft.core.Caches.memo]]): the first
-    * caller pays the shared run, the twin reads the already-drained sink.
-    *
-    * TWO micro-batches total: sentinel 1 rides IN the data batch (its own
-    * user group, filtered from the output), so the watermark committed
-    * after batch 1 is already a year past every real event; batch 2
-    * (sentinel 2) then evicts every real session deterministically —
-    * timeout/watermark eviction in batch N uses the watermark committed
-    * by batch N-1, which is why one trailing sentinel batch suffices (and
-    * why at least one is needed). */
-  private def sessionizeSharedRun(spark: SparkSession, dir: String,
-      gapMinutes: Long): (DataFrame, DataFrame) = {
-    val events = graft.queries.Tables.t(spark, dir, "events")
-    graft.core.Caches.memo(events, s"sessionizeRun:$gapMinutes") {
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val recs = events
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("event_id"))
-        .as[(Long, Long, Double, Long)].collect()
-      val maxUs = recs.iterator.map(_._2).max
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double, Long)]
-      val src = ms.toDF().toDF("user_id", "ts_us", "value", "event_id")
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-      val native = src
-        .withWatermark("ts", "0 seconds")
+      gapMinutes: Long, sinkName: String = "stream_sess_native_sink"): DataFrame =
+    sentinelReplay(spark, dir, sinkName, "value", 0.0)(
+      _.withWatermark("ts", "0 seconds")
         .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(20, 6))).cast("double").as("sess_sum"))
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events"), col("sess_sum"))
-      // distinct sink names per (dir, gap) so a second replay in the same
-      // session (different scale factor) can never clobber a memoized view
-      val tag = math.abs((dir, gapMinutes).hashCode())
-      val etSink = s"stream_sess_et_$tag"
-      val natSink = s"stream_sess_native_$tag"
-      val Seq(et, nat) = replay(spark, "8", Seq(
-          () => ms.addData(recs.toIndexedSeq :+ ((-1L, maxUs + 365L * 86400L * 1000000L, 0.0, 0L))),
-          () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, 0.0, 1L)))))(
-        sessionizeStreamEventTime(src, gapMinutes) -> memory(etSink, OutputMode.Append()),
-        native -> memory(natSink, OutputMode.Append()))
-      (et.filter(col("user_id") >= 0), nat.filter(col("user_id") >= 0))
-    }
-  }
+          col("n_events"), col("sess_sum")))
 
   /** DYNAMIC-gap native sessionization under streaming — the
     * variable-timeout `session_window` (gap an expression of the event:
     * purchases close in 5min, browsing in 30min) with engine-managed
-    * state merge and watermark eviction; the two-sentinel pattern (one
-    * riding in the data batch, one trailing batch) closes every real
-    * session deterministically, so the bounded replay shares the batch
-    * `sessionize_dynamic` oracle verbatim. */
+    * state merge and watermark eviction; the [[sentinelReplay]] drain
+    * closes every real session deterministically, so the bounded replay
+    * shares the batch `sessionize_dynamic` oracle verbatim. */
   def sessionizeDynamicOnce(spark: SparkSession, dir: String,
-      sinkName: String = "stream_sess_dyn_sink"): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_type"), col("event_id"))
-      .as[(Long, Long, String, Long)].collect()
-    val maxUs = recs.iterator.map(_._2).max
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String, Long)]
-    val src = ms.toDF().toDF("user_id", "ts_us", "event_type", "event_id")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val out = src
-      .withWatermark("ts", "0 seconds")
-      .groupBy(col("user_id"), session_window(col("ts"),
-        when(col("event_type") === "purchase", "5 minutes")
-          .otherwise("30 minutes")))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("start_us"),
-        unix_micros(col("session_window.end")).as("end_us"),
-        col("n_events"))
-    replay(spark, "8", Seq(
-        () => ms.addData(recs.toIndexedSeq :+
-          ((-1L, maxUs + 365L * 86400L * 1000000L, "view", 0L))),
-        () => ms.addData(Seq((-1L, maxUs + 2L * 365L * 86400L * 1000000L, "view", 1L)))))(
-      out -> memory(sinkName, OutputMode.Append())).head
-      .filter(col("user_id") >= 0)
-  }
+      sinkName: String = "stream_sess_dyn_sink"): DataFrame =
+    sentinelReplay(spark, dir, sinkName, "event_type", "view")(
+      _.withWatermark("ts", "0 seconds")
+        .groupBy(col("user_id"), session_window(col("ts"),
+          when(col("event_type") === "purchase", "5 minutes")
+            .otherwise("30 minutes")))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("start_us"),
+          unix_micros(col("session_window.end")).as("end_us"),
+          col("n_events")))
 
   /** FILE-SOURCE twin of [[sessionizeDynamicOnce]] — native dynamic-gap
     * `session_window` fed by the production no-collect ingest path:
@@ -1758,13 +1599,12 @@ object StreamOps {
     * = the batch `sessionize_dynamic`'s verbatim. */
   def sessionizeDynamicOnceFile(spark: SparkSession, dir: String,
       sinkName: String = "stream_sess_dyn_file_sink"): DataFrame = {
-    val yearUs = 365L * 86400L * 1000000L
     val feed0 = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
     def sentinel(bounds: DataFrame, years: Long, wave: Long) = bounds.select(
       lit(-1L).as("user_id"),
-      (col("__t1") - 1L + lit(years * yearUs)).as("ts_us"),
+      (col("__t1") - 1L + lit(years * YearUs)).as("ts_us"),
       lit("view").as("event_type"), lit(wave - 3L).as("event_id"),
       lit(wave).as("__wave"))
     val src = rangeWaves(feed0, "ts_us", "stream_sessdyn_src",
@@ -1792,79 +1632,35 @@ object StreamOps {
     * buffered left row is evictable once the watermark passes
     * lts + window, a right row once it passes rts — the engine derives
     * both bounds from the condition). Inner-join rows emit as soon as
-    * both sides have arrived, so the bounded replay needs ONE
-    * micro-batch and no sentinel drain. At scale the state store is
-    * partitioned by the equi-key (user), exactly like the batch
-    * shuffle-join it mirrors.
+    * both sides have arrived. At scale the state store is partitioned
+    * by the equi-key (user), exactly like the batch shuffle-join it
+    * mirrors.
     *
     * `joinType = "left_outer"` additionally emits each unmatched left
     * row (null right columns) — but only once the watermark passes
     * `lts + window`, when the engine KNOWS no matching right row can
-    * still arrive. The bounded replay then needs the sentinel drain:
-    * a sentinel PAIR (one event per side, user −1, so both branch
-    * watermarks advance) rides in the data batch, and one trailing
-    * sentinel-pair batch evicts the unmatched lefts (eviction in batch N
-    * uses the watermark committed by batch N−1). */
+    * still arrive. That needs the [[sentinelReplay]] drain, with a
+    * sentinel PAIR (one event per side, so both branch watermarks
+    * advance); both join types run it, and the sentinel rows' user −1
+    * keeps them out of either result. */
   def intervalJoinOnce(spark: SparkSession, dir: String, leftType: String,
       rightType: String, windowMinutes: Long, joinType: String = "inner",
       sinkName: String = "stream_interval_join_sink"): DataFrame =
-    if (joinType == "inner")
-      intervalJoinSharedRun(spark, dir, leftType, rightType, windowMinutes)._1
-    else
-      intervalJoinSharedRun(spark, dir, leftType, rightType, windowMinutes)._2
-
-  /** ONE bounded replay drives BOTH interval-join queries — the inner and
-    * left-outer forms subscribe to the SAME MemoryStream and drain the
-    * same micro-batches concurrently (the multiplexed-source shape,
-    * memoized like [[sessionizeSharedRun]]). The sentinel pair the
-    * left-outer form needs is harmless to the inner form: sentinel rows
-    * carry user −1 and are filtered from both outputs. */
-  private def intervalJoinSharedRun(spark: SparkSession, dir: String,
-      leftType: String, rightType: String,
-      windowMinutes: Long): (DataFrame, DataFrame) = {
-    val events = graft.queries.Tables.t(spark, dir, "events")
-    graft.core.Caches.memo(events,
-        s"intervalJoinRun:$leftType:$rightType:$windowMinutes") {
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val recs = events
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_type"), col("event_id"))
-        .as[(Long, Long, String, Long)].collect()
-      val maxUs = recs.iterator.map(_._2).max
-      def sentinels(ts: Long) =
-        Seq((-1L, ts, leftType, -1L), (-1L, ts, rightType, -2L))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Long)]
-      val src = ms.toDF().toDF("user_id", "ts_us", "event_type", "event_id")
-      def joined(joinType: String): DataFrame = {
-        val left = src.filter(col("event_type") === leftType)
-          .select(col("user_id"), timestamp_micros(col("ts_us")).as("lts"),
-            col("event_id").as("ea"))
-          .withWatermark("lts", "0 seconds")
-        val right = src.filter(col("event_type") === rightType)
-          .select(col("user_id").as("r_user"), timestamp_micros(col("ts_us")).as("rts"),
-            col("event_id").as("eb"))
-          .withWatermark("rts", "0 seconds")
-        left.join(right,
-            col("user_id") === col("r_user") &&
-              col("rts") >= col("lts") &&
-              col("rts") <= col("lts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-            joinType)
-          .select(col("user_id"), col("ea"), col("eb"),
-            unix_micros(col("lts")).as("lts_us"), unix_micros(col("rts")).as("rts_us"))
-      }
-      val tag = math.abs((dir, leftType, rightType, windowMinutes).hashCode())
-      val innerSink = s"stream_ij_inner_$tag"
-      val leftSink = s"stream_ij_left_$tag"
-      val Seq(inner, leftOuter) = replay(spark, "8", Seq(
-          () => ms.addData(recs.toIndexedSeq ++ sentinels(maxUs + 365L * 86400L * 1000000L)),
-          () => ms.addData(sentinels(maxUs + 2L * 365L * 86400L * 1000000L))))(
-        joined("inner") -> memory(innerSink, OutputMode.Append()),
-        joined("left_outer") -> memory(leftSink, OutputMode.Append()))
-      (inner.filter(col("user_id") >= 0), leftOuter.filter(col("user_id") >= 0))
+    sentinelReplay(spark, dir, sinkName, "event_type", leftType, rightType) { src =>
+      val left = src.filter(col("event_type") === leftType)
+        .select(col("user_id"), col("ts").as("lts"), col("event_id").as("ea"))
+        .withWatermark("lts", "0 seconds")
+      val right = src.filter(col("event_type") === rightType)
+        .select(col("user_id").as("r_user"), col("ts").as("rts"), col("event_id").as("eb"))
+        .withWatermark("rts", "0 seconds")
+      left.join(right,
+          col("user_id") === col("r_user") &&
+            col("rts") >= col("lts") &&
+            col("rts") <= col("lts") + expr(s"INTERVAL $windowMinutes MINUTES"),
+          joinType)
+        .select(col("user_id"), col("ea"), col("eb"),
+          unix_micros(col("lts")).as("lts_us"), unix_micros(col("rts")).as("rts_us"))
     }
-  }
 
   /** Streaming PARQUET (file) sink roundtrip: the tumbling-window
     * resample aggregation written with `writeStream.format("parquet")` in
@@ -1887,7 +1683,7 @@ object StreamOps {
       .select(unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[EventRec].collect()
     val maxUs = recs.iterator.map(_.ts_us).max
-    val sentinelUs = maxUs + 365L * 86400L * 1000000L
+    val sentinelUs = maxUs + YearUs
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventRec]
     val agg = ms.toDF()
       .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -1903,9 +1699,9 @@ object StreamOps {
     val outDir = outPath.toString
     replay(spark, "4", Seq(
         () => ms.addData(recs.toIndexedSeq :+ EventRec(sentinelUs, 0.0)),
-        () => ms.addData(Seq(EventRec(sentinelUs + 365L * 86400L * 1000000L, 0.0)))))(
+        () => ms.addData(Seq(EventRec(sentinelUs + YearUs, 0.0)))))(
       agg -> (_.format("parquet").option("path", outDir).outputMode(OutputMode.Append())))
-    spark.read.parquet(outDir).filter(col("bucket_us") < sentinelUs - 365L * 86400L * 1000000L / 2)
+    spark.read.parquet(outDir).filter(col("bucket_us") < sentinelUs - YearUs / 2)
   }
 
   /** STREAM-STATIC broadcast enrichment: the event stream joined to a

@@ -8,7 +8,6 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.core.Caches
 import graft.operators.Similarity
@@ -109,34 +108,6 @@ class MemoSpec extends SparkSpec {
       finally release.countDown()
       assert(Await.result(slow, 60.seconds) === "slow")
     } finally { pool.shutdown(); pool.awaitTermination(60, TimeUnit.SECONDS) }
-  }
-
-  test("(d) a concurrently called shared stream run starts one query") {
-    val started = new AtomicInteger(0)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        if (Option(e.name).exists(_.startsWith("stream_sess_et_"))) started.incrementAndGet()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    val pool = Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      // a gap no declared query uses, so the run cannot be memoized already
-      val calls = (1 to 4).map(i => Future {
-        val df =
-          if (i % 2 == 0) graft.streaming.StreamOps.sessionizeOnceEventTime(spark, sf001, 23)
-          else graft.streaming.StreamOps.sessionizeOnceNative(spark, sf001, 23)
-        df.count()
-      })
-      val counts = Await.result(Future.sequence(calls), 300.seconds)
-      assert(counts.forall(_ > 0))
-      assert(started.get() === 1)
-    } finally {
-      spark.streams.removeListener(listener)
-      pool.shutdown(); pool.awaitTermination(60, TimeUnit.SECONDS)
-    }
   }
 
   test("(e) a build that throws leaves no entry") {

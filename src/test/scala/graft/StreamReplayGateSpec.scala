@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * that writes, starts, drains or checkpoints a streaming query, or sets
   * the state-store provider — so the conf a replay sets is set under its
   * lock and restored at start, and no twin spells the protocol out again —
-  * and a twin's result is the frame `replay` returns, not a session table. */
+  * a twin's result is the frame `replay` returns, not a session table, and
+  * each twin runs its own replay rather than one memoized for another. */
 class StreamReplayGateSpec extends AnyFunSuite {
 
   private val replayOnly = Seq("writeStream", ".start()", "processAllAvailable",
@@ -62,6 +63,13 @@ class StreamReplayGateSpec extends AnyFunSuite {
     val reads = code(read(ops)).linesIterator.zipWithIndex
       .collect { case (l, i) if l.contains("spark.table(") => i + 1 }.toSeq
     assert(reads.isEmpty, s"use the frame replay returns, not the sink's temp view; lines $reads")
+  }
+
+  test("no stream twin memoizes its run for another query") {
+    val ops = Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
+    val memos = code(read(ops)).linesIterator.zipWithIndex
+      .collect { case (l, i) if l.contains("Caches.memo") => i + 1 }.toSeq
+    assert(memos.isEmpty, s"each twin runs its own replay; Caches.memo on lines $memos")
   }
 
   test("the gate flags a token outside replay and passes one inside it or in a comment") {

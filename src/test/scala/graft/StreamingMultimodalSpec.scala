@@ -143,6 +143,21 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(viaMem.sameElements(viaFile))
   }
 
+  test("a stream twin returns the same rows through either ingest; the native session twin the batch rows") {
+    val q = graft.queries.StreamQueries.queries
+    def rows(name: String) = q(name)(spark, sf001).collect().map(_.toString).sorted.toSeq
+    Seq("stream_transitions" -> "stream_transitions_file",
+        "stream_attribution" -> "stream_attribution_file",
+        "stream_scd2" -> "stream_scd2_file",
+        "stream_merge" -> "stream_merge_file",
+        "stream_heavy_hitters" -> "stream_hh_file",
+        "sessionize_native" -> "stream_sessionize_native").foreach { case (a, b) =>
+      val expected = rows(a)
+      assert(expected.nonEmpty, a)
+      assert(rows(b) === expected, s"$b differs from $a")
+    }
+  }
+
   test("watermark drops late data in append-mode windowed aggregation") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
