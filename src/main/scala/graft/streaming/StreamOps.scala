@@ -191,7 +191,9 @@ object StreamOps {
   /** One bounded replay of `query` over `dir`'s events, drained by two
     * sentinels, with the sentinel rows filtered from its result. The
     * stream's rows are (user_id, ts_us, `attr`, event_id) plus `ts`; a
-    * sentinel is one row per value in `sentinelAttrs`, of user −1.
+    * sentinel is one row per value in `sentinelAttrs`, of user −1. The
+    * rows are encoded against the events schema, so `T` must be `attr`'s
+    * column type: `Double` for `value`, `String` for `event_type`.
     *
     * TWO micro-batches: sentinel 1, a year past the last event, rides IN
     * the data batch, so the watermark committed after batch 1 is already
@@ -200,8 +202,8 @@ object StreamOps {
     * deterministically. Timeout and watermark eviction in batch N use the
     * watermark committed by batch N−1, which is why one trailing sentinel
     * batch suffices, and why at least one is needed. */
-  private def sentinelReplay(spark: SparkSession, dir: String, sinkName: String,
-      attr: String, sentinelAttrs: Any*)(query: DataFrame => DataFrame): DataFrame = {
+  private def sentinelReplay[T](spark: SparkSession, dir: String, sinkName: String,
+      attr: String, sentinelAttrs: T*)(query: DataFrame => DataFrame): DataFrame = {
     val feed = graft.queries.Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col(attr), col("event_id"))
     val recs = feed.collect()
@@ -1541,8 +1543,8 @@ object StreamOps {
     * which is exactly the bounded-state claim: stream-with-expiry == batch
     * on a bounded source. */
   def sessionizeOnceEventTime(spark: SparkSession, dir: String,
-      gapMinutes: Long, sinkName: String = "stream_sess_et_sink"): DataFrame =
-    sentinelReplay(spark, dir, sinkName, "value", 0.0)(
+      gapMinutes: Long): DataFrame =
+    sentinelReplay(spark, dir, "stream_sess_et_sink", "value", 0.0)(
       sessionizeStreamEventTime(_, gapMinutes))
 
   /** Native `session_window` sessionization under Structured Streaming —
@@ -1553,8 +1555,8 @@ object StreamOps {
     * [[sentinelReplay]] drain closes every real session deterministically,
     * so the oracle is the FULL batch session_window result. */
   def sessionizeOnceNative(spark: SparkSession, dir: String,
-      gapMinutes: Long, sinkName: String = "stream_sess_native_sink"): DataFrame =
-    sentinelReplay(spark, dir, sinkName, "value", 0.0)(
+      gapMinutes: Long): DataFrame =
+    sentinelReplay(spark, dir, "stream_sess_native_sink", "value", 0.0)(
       _.withWatermark("ts", "0 seconds")
         .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
         .agg(count(lit(1)).as("n_events"),
